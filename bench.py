@@ -135,10 +135,9 @@ def main() -> None:
         "queries": timings,  # per-query MIN of the three timed runs
         "queries_all": samples,  # all three samples, run order preserved
         "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
-        # VERDICT r11 item 7: scaling runs are self-describing — the 8-core
-        # and 32-core records differ in this field, nothing else. Protocol
-        # (warmup + min-of-3, noop sink) FROZEN since r11.
-        "cpus": int(os.environ.get("SPARK_GRAFT_CPUS", "32")),
+        # Scaling runs are self-describing: the core count comes from the
+        # live session. Protocol (warmup + min-of-3, noop sink) is frozen.
+        "cpus": spark.sparkContext.defaultParallelism,
     }
     print(json.dumps(record))
     spark.stop()

@@ -92,6 +92,13 @@ def _depth(line: str) -> int:
     return len(m.group(0)) // 3
 
 
+def _skip(line: str) -> bool:
+    """Blank lines and section headers (``== Physical Plan ==``, AQE's
+    ``+- == Final Plan ==``). Only the header shape counts: a ``==``
+    inside a node's literal (e.g. base64 ``'YQ=='``) is a plan node."""
+    return not line.strip() or line.lstrip(" :+-").startswith("==")
+
+
 def scale_audit(df: DataFrame, *, allow_bnlj: bool = True) -> list[tuple[str, str]]:
     """Lint ``df``'s physical plan for patterns that break at cluster scale."""
     plan = _plan_text(df)
@@ -109,7 +116,7 @@ def scale_audit(df: DataFrame, *, allow_bnlj: bool = True) -> list[tuple[str, st
         parent = ""
         for j in range(i - 1, -1, -1):
             cand = lines[j]
-            if not cand.strip() or "==" in cand:  # section headers, blanks
+            if _skip(cand):
                 continue
             if _depth(cand) < d:
                 parent = cand
@@ -159,12 +166,11 @@ def scale_audit(df: DataFrame, *, allow_bnlj: bool = True) -> list[tuple[str, st
         path: list[tuple[int, bool]] = []
         for j in range(i + 1, len(lines)):
             cand = lines[j]
-            # same guard as the single_partition walk (ADVICE r11): an
-            # already-executed AQE plan embeds '== Final Plan ==' /
-            # '== Initial Plan ==' section headers whose depth-0 prefix
+            # an already-executed AQE plan embeds '+- == Final Plan ==' /
+            # '+- == Initial Plan ==' section headers whose shallow prefix
             # would otherwise end the subtree walk early or double-count
             # a Python stage once per section.
-            if not cand.strip() or "==" in cand:
+            if _skip(cand):
                 continue
             d = _depth(cand)
             if d <= d0:

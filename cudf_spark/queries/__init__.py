@@ -8,16 +8,8 @@ correctness gate.
 
 from cudf_spark.queries.registry import REGISTRY, Query, register  # noqa: F401
 
-# Import for registration side effects.
-#
-# ORDER MATTERS: the driver's correctness gate checks ~50 queries per round
-# in registration order.  Module import order is too coarse (several modules
-# mix driver-green and never-checked queries), so after importing everything
-# the registry is explicitly reordered: queries with no green CORRECTNESS
-# row across r01+r02 come first, then the two stale r01 hash-fails whose
-# oracle-CAST fix (commit 010229e) needs a driver re-check, then everything
-# already proven green.
-from cudf_spark.queries import (  # noqa: F401, E402
+# Import for registration side effects; REGISTRY keeps import order.
+from cudf_spark.queries import (  # noqa: F401
     aggregates,
     aggregates2,
     analytics,
@@ -47,537 +39,6 @@ from cudf_spark.queries import (  # noqa: F401, E402
     text6,
     windows,
 )
-
-# Round-3 check window: 48 queries with no CORRECTNESS row in r01/r02, in
-# family order, followed by the two r01 HUGEINT hash-fails (fix committed,
-# never re-checked).  Names listed explicitly so the priority survives any
-# module re-organisation; a stale name here is a hard error at import time.
-_ROUND3_PRIORITY = [
-    # streaming tail (r02 checked the first four streaming queries only)
-    "stream_interval_join",
-    "events_time_rollup",
-    "stream_enrich_static",
-    # TPC-H tail
-    "q02_min_cost_supplier",
-    "q11_important_stock",
-    "q12_shipping_priority_class",
-    "q17_small_quantity_revenue",
-    "q20_excess_suppliers",
-    "q21_waiting_supplier",
-    "q22_global_sales_opportunity",
-    # aggregates2 / curation / text
-    "agg_quantile_modes",
-    "text_bpe_tokenize",
-    "dedup_substring_spans",
-    "dedup_minhash_chargram",
-    "text_decontaminate",
-    "text_repetition_signals",
-    "text_tfidf_topk",
-    "doc_pack_greedy",
-    "text_redact_pii",
-    "curation_pipeline",
-    "text_quality_gopher",
-    "doc_sample_split",
-    # decimals / datetime / string extras
-    "decimal_fixed_point",
-    "dt_durations",
-    "str_json_struct",
-    "interpolate_linear",
-    # reshape
-    "reshape_pivot",
-    "reshape_melt",
-    "reshape_crosstab",
-    "reshape_one_hot",
-    "reshape_transpose",
-    "reshape_interleave",
-    "reshape_tile",
-    # similarity / multimodal
-    "ann_ivf_topk",
-    "mm_image_features",
-    "mm_frame_sample",
-    # scalar math family
-    "math_unary",
-    "math_binary_bitwise",
-    "replace_fill_clamp",
-    "replace_nan_handling",
-    "search_bounds_isin",
-    "sample_deterministic",
-    "partition_histogram",
-    "drop_nulls_thresh",
-    "dictionary_encode",
-    "misc_row_bit_count",
-    "dictionary_set_keys",
-    "join_asof_nearest",
-    # stale r01 hash-fails — oracle CAST fix committed in 010229e
-    "agg_kinds_basic",
-    "list_higher_order",
-]
-
-_missing = [n for n in _ROUND3_PRIORITY if n not in REGISTRY]
-if _missing:  # pragma: no cover - registration bug guard
-    raise RuntimeError(f"priority list names unknown queries: {_missing}")
-
-
-def _driver_records(records_dir: str) -> tuple[list[str], set[str], set[str]]:
-    """(record paths, checked names, green names) from EVERY
-    ``CORRECTNESS_r*.json`` the driver has committed.
-
-    This is THE single source of truth for 'has the driver ever checked
-    this query' — the rotation below and tests/test_rotation.py both
-    read it, so a new driver round can never desynchronize the two
-    (rounds 3 and 4 each broke a test that re-derived this with a
-    hardcoded round range).
-    """
-    import glob
-    import json
-    import os
-
-    paths = sorted(glob.glob(os.path.join(records_dir, "CORRECTNESS_r*.json")))
-    checked: set[str] = set()
-    green: set[str] = set()
-    for path in paths:
-        try:
-            with open(path) as fh:
-                data = json.load(fh)
-        except (OSError, ValueError):  # pragma: no cover - tolerate junk
-            continue
-        for name, row in data.items():
-            checked.add(name)
-            if row.get("hash_match") or (
-                row.get("err") == "no_oracle" and (row.get("spark_rows") or 0) > 0
-            ):
-                green.add(name)
-    return paths, checked, green
-
-
-# Judge-requested check-window pins, keyed by the driver round whose
-# window they target (VERDICT r06 item 8: one dict, one-line diff per
-# round). Each cohort was an explicit VERDICT ask; within the
-# never-checked backlog, older cohorts outrank newer ones, and the
-# LATEST round's pins enter the window even when already green (used for
-# re-proving upgraded oracles whose only driver rows predate the
-# upgrade). tests/test_rotation.py asserts every name exists in the
-# registry and that the latest cohort sits inside the ~50-slot window.
-JUDGE_PINS: dict[int, set[str]] = {
-    # VERDICT r03 item 1: twelve round-3 queries with no driver row
-    4: {
-        "dedup_substring_exact", "agg_sketch_merge", "ewma_global_segmented",
-        "dedup_duplicate_clusters", "doc_domain_mix", "dictionary_update_keys",
-        "mm_audio_features", "stream_stateful_totals", "doc_chunk_overlap",
-        "emb_quantize_int8", "agg_var_ddof", "doc_weighted_sample",
-    },
-    # VERDICT r04 item 2: the round-4 second wave (registration order
-    # stopped reflecting age when newer modules began importing
-    # alphabetically ahead of older ones)
-    5: {
-        "curation_pipeline_v2", "fuzzy_token_pairs", "graph_pagerank",
-        "group_head_tail", "stream_interval_join_outer", "text_bigram_loglik",
-        "text_bpe_train", "text_dedup_within_doc", "text_normalize_nfc",
-        "text_quality_classifier", "text_remove_boilerplate",
-        "text_sparse_cosine_pairs", "text_unigram_tokenize",
-        "win_cumulative_distinct", "win_pct_change", "win_rolling_median",
-    },
-    # VERDICT r05 item 3: the 10 scale-audit-flagged queries + 6 io_*
-    # (first driver proof of the IO layer) + the round-6 real codecs
-    6: {
-        "stats_hill_tail_index", "pipeline_curriculum_phases",
-        "graph_rich_club_coefficient", "agg_hdr_latency_percentiles",
-        "stats_ljung_box", "stats_sprt_crossing", "stats_odds_ratio_mh",
-        "stats_youden_j_threshold", "ml_pr_auc",
-        "misc_shard_rebalance_pairing",
-        "io_avro_roundtrip_agg", "io_bucketed_join_agg",
-        "io_multiformat_roundtrip", "io_parquet_codec_roundtrip",
-        "io_partitioned_write_pruning", "io_schema_evolution_merge",
-        "mm_wav_real_codec", "mm_bmp_real_codec",
-    },
-    # VERDICT r06 item 3: the two EWMA queries whose closed-form oracles
-    # (upgraded r05/r06) have only stale no_oracle driver rows from
-    # r02/r04 — they count as green, so they must be re-pinned to get
-    # the upgraded oracle under the driver's hash gate. Plus the three
-    # round-7 rows-only-to-hash-gate upgrades (VERDICT r06 item 6:
-    # murmur3-replay partition oracle, recursive-CTE BPE + Viterbi
-    # replays), pinned in the round they shipped so their oracles don't
-    # sit driver-unproven the way the EWMA ones did.
-    7: {
-        "ewma_per_user", "ewma_global_segmented",
-        "partition_histogram", "text_bpe_tokenize", "text_unigram_tokenize",
-    },
-    # VERDICT r07 item 1: the 13 queries whose ORACLE SQL changed during
-    # round 7 AFTER their last driver row (judge diffed oracles_dict()
-    # between the r6 and r7 trees). Their stale green rows prove the OLD
-    # oracle only, so they must re-enter the window for a fresh hash row
-    # under the rewritten oracle. tests/test_oracle_proof.py now turns
-    # this rule into a mechanical invariant: any oracle edit without a
-    # same-round pin fails the suite.
-    # Plus agg_approx_sketches: its rows-only -> hash-gate upgrade
-    # (VERDICT r07 item 5) ships a brand-new oracle this round. Plus the
-    # FIVE driver-green queries whose oracles gained degenerate-input
-    # guards / ordered float folds in the round-8 analytics2-4
-    # self-review (stats_youden_j_threshold, ml_pr_auc,
-    # stats_kendall_tau_binned, stats_ljung_box, doc_neyman_allocation —
-    # the last caught by the stale-oracle guard itself when its pin was
-    # missed) — pinned in the SAME round as the edit, the rule
-    # tests/test_oracle_proof.py enforces. Plus the two green queries
-    # whose SPARK-side implementation materially changed with oracles
-    # untouched (agg_lorenz_curve_binned: new two-level cumsum path;
-    # curation_pipeline_v4: ent_ok/lang_ok NULL-guard semantics) — the
-    # hash gate proves spark-output == oracle-output for the code AS
-    # RUN, so an engine rewrite invalidates a green row's proof exactly
-    # like an oracle edit does, it just isn't mechanically detectable
-    # from oracles_dict().
-    8: {
-        "agg_argminmax", "agg_quantile_modes", "agg_var_ddof",
-        "agg_trimmed_mean", "clean_winsorize", "events_rfm_scores",
-        "str_json_struct", "str_casts", "str_url", "join_asof",
-        "map_ops", "q05_local_supplier_volume",
-        "q22_global_sales_opportunity", "agg_approx_sketches",
-        "stats_youden_j_threshold", "ml_pr_auc",
-        "stats_kendall_tau_binned", "stats_ljung_box",
-        "doc_neyman_allocation",
-        "agg_lorenz_curve_binned", "curation_pipeline_v4",
-        # fourth sweep (text5/text6/sketches/avro): two green queries
-        # whose unordered float folds ahead of a threshold/round were
-        # replaced with sorted folds on BOTH engines
-        "text_sparse_cosine_pairs", "text_bigram_loglik",
-    },
-    # Round-9 engine rewrites with oracles untouched (the hash gate
-    # proves spark-output == oracle-output for the code AS RUN, so an
-    # engine rewrite invalidates a green row's proof exactly like an
-    # oracle edit — same rule as agg_lorenz_curve_binned in round 8):
-    # ewma_global_segmented moved from the Arrow two-pass to the
-    # pure-JVM three-level scan (VERDICT r08 item 3, 28s -> ~2s at
-    # sf0.1, hash re-verified at 3 SFs locally); the four graph queries
-    # got the constant-factor pass (VERDICT r08 item 4: max_by argmax
-    # replaces per-round windows, unified edge materialization, mirrored
-    # directed build — hashes re-verified at sf0.01 locally). Plus
-    # text_bpe_train, whose brand-new unrolled-CTE training oracle
-    # (VERDICT r08 item 6, the last rows-only -> hash upgrade) needs its
-    # first driver hash row.
-    9: {
-        "ewma_global_segmented",
-        "graph_label_propagation", "graph_modularity_score",
-        "graph_triangle_count", "graph_bfs_hops",
-        "graph_assortativity",
-        "text_bpe_train",
-        # constant-factor engine rewrites, oracles untouched, values
-        # verified identical (hash MATCH at 2-3 SFs locally):
-        # stats_bootstrap_ci_poisson binds the md5 uniform behind a
-        # Generate barrier (8.4 -> 6.3 s); graph_adamic_adar materializes
-        # its weighted edge table (measured neutral-to-positive; the
-        # identical pattern measured WORSE in graph_jaccard_neighbors and
-        # was reverted there — comment-only diff, no pin needed).
-        # graph_transitivity_global is ALSO rewritten (degree-oriented
-        # wedges) but has no green row to invalidate — it is already in
-        # the window as never-checked.
-        "stats_bootstrap_ci_poisson",
-        "graph_adamic_adar",
-        # emb_pca_power_iter: gram + per-round gv checkpoints kill the
-        # 2^rounds Gram-matrix recompute nest (6.3 -> 4.2 s min-of-N,
-        # hash MATCH at sf0.01)
-        "emb_pca_power_iter",
-        # the markov pair shares _markov_chain, whose cr + per-round v
-        # (<= K^2 rows) are now checkpointed — same finding; hash MATCH
-        # at sf0.01 for both
-        "events_markov_stationary", "events_markov_entropy_rate",
-    },
-    # Round-10 engine rewrites, oracles untouched (same rule as r8/r9 —
-    # an engine rewrite invalidates a green row's proof): triangle moved
-    # from the wedge-join form (~36M-row wedge shuffle at sf0.1) to the
-    # degree-oriented edge-iterator intersection form (8.13 -> 5.46 s
-    # min-of-5 fresh-process); modularity fused its eii/ai/m passes over
-    # ONE checkpointed per-edge label table and dropped the deg groupBy
-    # (9.66 -> 6.04 s); both plus LPA replaced the identity round 0 with
-    # its closed form min-neighbour groupBy. Hashes re-verified at 3 SFs
-    # locally before pinning.
-    10: {
-        "graph_triangle_count",
-        "graph_modularity_score",
-        "graph_label_propagation",
-        # gated_ids localCheckpoint (VERDICT r09 item 4); in-noise at
-        # fixture scale, kept for the 100 TB recompute argument
-        "curation_pipeline_v3",
-        # ADVICE r09: bucketing now layout-independent (num_partitions
-        # pinned + exact equi-width splitters) — bucket boundaries moved,
-        # so the pre-round(,4) bits changed class; hash re-verified at
-        # 3 SFs locally
-        "ewma_global_segmented",
-        # same edge-iterator intersection rewrite as triangle (shared
-        # operators/graphs.py:triangle_witnesses), oracle untouched
-        "graph_transitivity_global",
-        # frontier now read back from the checkpointed visited union
-        # (recompute-nest fix, 6.67 -> 4.55 s), oracle untouched
-        "graph_bfs_hops",
-        # per-round survivor set checkpointed (in-noise locally, halves
-        # the per-round full-edge degree shuffle at scale)
-        "graph_kcore_peel",
-        # sound size-prefilter ahead of the per-pair intersect
-        # (J <= min/max; 7.37 -> 6.82 s), oracle untouched
-        "dedup_ngram_jaccard",
-        # r10 nest audit: t0 / s1 / exact_kept each fed 2-3 consumers
-        # unmaterialized (the S1+S2+S3 chain executed 3x); 7.75 -> 5.19 s
-        "curation_pipeline_v2",
-        # engine moved applyInPandas -> pure-JVM grouped block scan AND
-        # the oracle moved from the pandas-kernel recursive replay to
-        # the closed-form block algebra (4.79 -> 1.64 s); re-verified at
-        # 3 SFs locally — BOTH sides changed, so the driver re-proof is
-        # mandatory
-        "ewma_per_user",
-    },
-    # Round-11 engine rewrites, oracles untouched (same rule as r8-r10):
-    # triangle_witnesses' neighbor-list joins went left+coalesce -> inner
-    # (ADVICE r10: edges whose endpoint has no out-neighbors can never
-    # survive the size filter, so the null-extension rows were dead
-    # weight) — shared by both consumers below; values identical, plan
-    # changed, hash re-verified at 3 SFs locally before pinning.
-    # ewma_global_segmented is NOT pinned: the r11 ewma_segmented edits
-    # (splitters validation, derived-nbuckets scale path, closed-form
-    # bucket above 64 cuts) all sit outside the pinned
-    # num_partitions=32/width/WHEN-chain path the query executes — the
-    # plan as run is byte-identical (verified via driver_sim locally).
-    11: {
-        "graph_triangle_count",
-        "graph_transitivity_global",
-        # r11 fuzz-differential findings (scripts/fuzz_differential.py,
-        # seeds 1/2/4/5 — the randomized-fixture harness VERDICT r10
-        # item 1 asked for): seven latent degenerate-input forks fixed,
-        # each invisible on the null-free/non-empty driver fixtures, so
-        # the committed sf0.01 hashes are unchanged — pinned anyway per
-        # the oracle/engine-edit rule. replace_nan_handling: oracle
-        # isnan(NULL) NULL vs cudf's non-nullable BOOL8;
-        # misc_consistent_hash_ring: ANSI element_at abort on an empty
-        # ring; stream_checkpoint_exactly_once: <2 part files assert +
-        # NULL fingerprint; io_avro_roundtrip_agg: zero part files from
-        # an empty frame; stats_cramers_v: empty-table chi2 0.0-vs-NULL;
-        # win_rolling_mode + events_rfm_scores: NULL sort-order forks
-        # (Spark nulls-first vs DuckDB nulls-last).
-        "replace_nan_handling",
-        "misc_consistent_hash_ring",
-        "stream_checkpoint_exactly_once",
-        "io_avro_roundtrip_agg",
-        "stats_cramers_v",
-        "win_rolling_mode",
-        "events_rfm_scores",
-        # second fuzz sweep (seeds 6-12): ann one-row-query guard now
-        # admits ZERO rows (empty embeddings degrades to empty top-k
-        # instead of aborting); text_bigram_cond_entropy's empty-corpus
-        # fold gated to NULL like stats_cramers_v; stream_stateful_totals'
-        # oracle declares the accumulator's 0.0 start for all-null users.
-        "ann_cosine_topk",
-        "ann_lsh_bucketed",
-        "text_bigram_cond_entropy",
-        "stream_stateful_totals",
-        # third wave — hostile full-registry sweeps (seeds 20-23: each
-        # core table empty in turn, plus an all-null value column).
-        # Classes: grouping-sets () row on empty input (Spark emits
-        # none, SQL engines emit one — oracles gain the HAVING mirror:
-        # agg_grouping_sets/rollup/cube, events_time_rollup,
-        # stream_dq_monitor); ANSI zero-division on empty/degenerate
-        # denominators (events_funnel_stages, events_haar_wavelet_energy,
-        # stats_theil_u, events_time_to_convert, text_vocab_stats);
-        # empty-fold 0.0-vs-NULL gates (stats_chi_square,
-        # stats_ljung_box); driver-side empty-input crashes
-        # (stream_table_fingerprint ^= None,
-        # io_partitioned_write_pruning schema inference); all-NULL
-        # trial coalesce (stats_wilson_ci). Fixture hashes unchanged,
-        # re-verified at 3 SFs before pinning.
-        "agg_grouping_sets",
-        "agg_rollup",
-        "agg_cube",
-        "stream_dq_monitor",
-        "agg_hdr_latency_percentiles",
-        "events_funnel_stages",
-        "events_haar_wavelet_energy",
-        "events_time_rollup",
-        "events_time_to_convert",
-        "stats_chi_square",
-        "stats_ljung_box",
-        "stream_table_fingerprint",
-        "io_partitioned_write_pruning",
-        "stats_theil_u",
-        "text_vocab_stats",
-        "stats_wilson_ci",
-        # fourth wave — two more hostile shapes (seeds 24/25: empty
-        # orders, empty customer): agg_benford_check 0/0 on the empty
-        # grid (nullif both sides); dq_schema_drift empty-fold PSI gate;
-        # agg_linear_counting's oracle did float-`//`-then-CAST, which
-        # ROUNDS in DuckDB while Spark's `div` truncates — a knife-edge
-        # latent at any scale, now all-integer (seed-25 repro: 4141 vs
-        # 4140 at fraction .786).
-        "agg_benford_check",
-        "dq_schema_drift",
-        "agg_linear_counting",
-        # r11 OPTIMIZATION-round engine rewrites, oracles untouched (same
-        # rule as r8-r10; all hash re-verified at 3 SFs + hostile fuzz
-        # seeds incl. empty orders/lineitem and all-null values before
-        # pinning — see OPTIMIZATION_r11.md):
-        # q18: semi-join + full lineitem re-scan/re-agg folded into the
-        # per-order sum it already computed (2 lineitem passes -> 1);
-        # q21: late/multi split folded into ONE joined groupBy with
-        # conditional min/max (2 lineitem passes + agg-agg join -> 1);
-        # q02: filtered part keys semi-joined below the (partkey,
-        # suppkey) supply aggregation (pre-filters the widest shuffle);
-        # agg_sketch_merge: exact median moved off the per-group
-        # value-spooling Percentile ObjectHashAggregate onto a two-level
-        # (value, count) + cumulative-rank form (bit-identical formula);
-        # the three connected-components consumers share the round-1
-        # closed-form seed in operators/graphs.py (identity-label join
-        # round replaced by one groupBy over the edge list).
-        "q18_large_volume_customer",
-        "q21_waiting_supplier",
-        "q02_min_cost_supplier",
-        "agg_sketch_merge",
-        "dedup_duplicate_clusters",
-        "dedup_cluster_survivor",
-        "er_cluster_entities",
-        # text_rake_keywords: pw (regex-split + double-posexplode) fed two
-        # consumers whose exchanges differ (no AQE stage reuse possible) —
-        # checkpointed; A/B 4/6 pairs faster, min −20%. UNPINNED in the
-        # fifth session to make window room: checkpoint-only = hash-
-        # invariant by construction, and it has re-proven MATCH in every
-        # full driver_sim since landing. (The r11 engine edit to
-        # stream_stateful_totals — only (user_id, value) cross the Arrow
-        # boundary now, guide §4 — is covered by its existing pin in the
-        # fuzz wave above.)
-        # fifth wave — third-session assurance sweep (seeds 60-62):
-        # seed 62's NULL-bearing value column exposed the NULL-ordering
-        # fork in stats_odds_ratio_mh's exact-median cumulative window
-        # (Spark ASC = NULLS FIRST, DuckDB ASC = NULLS LAST — same class
-        # as win_rolling_mode/events_rfm_scores above); engine window now
-        # asc_nulls_last, fixture hashes unchanged, re-proven at 3 SFs.
-        "stats_odds_ratio_mh",
-        # fourth-session engine rewrites (operators/graphs.py, oracles
-        # untouched, hash re-verified at 3 SFs before pinning): the
-        # connected-components loop and both pagerank variants fold the
-        # per-round |V|⋈|V| left merge-join into the propagation /
-        # contribution aggregate via a unioned self/zero row (per-round
-        # SortMergeJoin 2→1, Exchange 4→3 — plans/r11/cc_round_*.txt,
-        # pagerank_round_*.txt). CC consumers already pinned above; the
-        # two fixed-point pagerank consumers pinned here.
-        "graph_pagerank",
-        "text_textrank_keywords",
-        # fifth-session engine rewrite (oracle untouched, hash
-        # re-verified at 3 SFs before pinning): graph_bfs_hops folds the
-        # per-round distinct + visited anti-join into ONE min(hop)
-        # groupBy over the shuffle-free union of visited and the
-        # frontier expansion (earliest hop wins) — per round
-        # SortMergeJoin 2→1 (the LeftAnti gone), Exchange 4→3, Sort 4→2
-        # (plans/r11/bfs_round_*.txt).
-        "graph_bfs_hops",
-        # fifth-session Python-boundary fix (oracles untouched, hashes
-        # re-verified at 3 SFs + empty-documents/all-null fuzz trees
-        # before pinning): the map-only multimodal/text-UDF queries end
-        # in a global sort whose range-sampling pass re-executed the
-        # whole uncheckpointed Arrow chain (2x rows through the Python
-        # boundary; 4x for mm_image_dup_ahash whose hash table also
-        # feeds the band self-join and output join, 2x for
-        # mm_audio_vad_segments' two frame consumers) — each now
-        # localCheckpoints the narrow per-asset table before the sort.
-        # Execution multipliers pinned at 1x by
-        # tests/test_plans.py::test_python_chain_executes_once.
-        # Window note: the fix class is hash-invariant by construction
-        # (a lazy checkpoint is a pure lineage barrier — no arithmetic,
-        # ordering or join change), and all TEN queries were re-proven
-        # at 3 SFs + fuzz in-session; to keep the latest cohort inside
-        # the ~50-slot driver window, only the class representatives
-        # are pinned (one per sub-shape: multi-consumer image/audio,
-        # single-chain codec, heavy text UDF). Unpinned but equally
-        # verified: mm_audio_features, mm_frame_sample,
-        # mm_image_features, text_normalize_nfc.
-        "mm_bmp_real_codec",
-        "mm_image_dup_ahash",
-        "text_bpe_tokenize",
-        "text_unigram_tokenize",
-        # The same sort-resample class then swept the JVM side: the
-        # sort's sampling pass re-ran dedup_ngram_jaccard's quadratic
-        # within-block verification (noop A/B 14.2 -> 7.7 s median, 5/5
-        # pairs) and emb_similar_pairs' all-pairs cosine (6.2 -> 3.6 s,
-        # 5/5); text_quality_gopher swapped its r8 sort-the-raw-scan
-        # form for compute->checkpoint->sort (narrow metric rows through
-        # the range exchange instead of the full text column; locally
-        # neutral, structural at scale). text_quality_score/_classifier
-        # carry the same checkpoint (A/B −28%/−14%) but stay unpinned —
-        # same hash-invariance rationale as above, window at 50.
-        # (mm_wav_real_codec, mm_audio_vad_segments and text_rake_keywords
-        # unpinned for the same reason to make room — mm_bmp_real_codec /
-        # mm_image_dup_ahash remain the shape representatives, and all
-        # three have re-proven MATCH in every full driver_sim since.)
-        "dedup_ngram_jaccard",
-        "emb_similar_pairs",
-        "text_quality_gopher",
-    },
-}
-
-
-def _rotation_from_driver_records(records_dir: str) -> list[str] | None:
-    """SELF-MAINTAINING rotation for round 4 onward.
-
-    Once CORRECTNESS_r03.json exists (the driver commits it at the end of
-    round 3), order the registry straight from the driver's own records:
-
-    1. checked-but-not-green — a red row on record needs the re-check most;
-    2. the LATEST JUDGE_PINS cohort, even when green — re-proof of
-       upgraded oracles whose driver rows predate the upgrade;
-    3. never-checked — no row yet, older pin cohorts first, then
-       oracle-backed before rows-only, in registration order;
-    4. green — already proven, lowest priority for the ~50-query window.
-
-    Returns None while only r01/r02 exist, so round 3 keeps the hand-
-    curated list above (which pins the judge-requested 48 + 2 exactly
-    into the window; the dynamic split would order the two stale fails
-    after 58 never-checked names and push them out).
-    """
-    import os
-
-    paths, checked, green = _driver_records(records_dir)
-    if not any(
-        os.path.basename(p) >= "CORRECTNESS_r03.json" for p in paths
-    ):
-        return None
-    reg = list(REGISTRY)
-    red = [n for n in reg if n in checked and n not in green]
-    # Pins from the LATEST round apply regardless of green status: a
-    # query whose ORACLE was upgraded after its last driver row still
-    # counts as green (the stale row proves the old, weaker oracle), so
-    # without this the rotation would never re-prove it.
-    latest_pins = JUDGE_PINS[max(JUDGE_PINS)]
-    repin = [n for n in reg if n in latest_pins and n in green]
-    never = [n for n in reg if n not in checked]
-    # Within never-checked, older judge-requested cohorts outrank newer
-    # ones (each was an explicit VERDICT ask), and oracle-backed queries
-    # outrank rows-only ones (a rows-only query can only ever earn the
-    # weak rows check, so deferring it loses less evidence than
-    # deferring a full-hash candidate). Stable sort keeps registration
-    # order as the final tie-break.
-    # A query can sit in several cohorts (e.g. ewma_global_segmented in
-    # rounds 4 and 7): the OLDEST round must win the priority sort, so
-    # build the map with setdefault — a plain dict comprehension over
-    # ascending rounds would let the newest membership overwrite it.
-    cohort_round: dict[str, int] = {}
-    for rnd in sorted(JUDGE_PINS):
-        for name in JUDGE_PINS[rnd]:
-            cohort_round.setdefault(name, rnd)
-    never.sort(
-        key=lambda n: (
-            cohort_round.get(n, max(JUDGE_PINS) + 1),
-            REGISTRY[n].oracle is None,
-        )
-    )
-    rest = [n for n in reg if n in green and n not in latest_pins]
-    return [*red, *repin, *never, *rest]
-
-
-import os as _os  # noqa: E402
-
-_repo_root = _os.path.dirname(
-    _os.path.dirname(_os.path.dirname(_os.path.abspath(__file__)))
-)
-_order = _rotation_from_driver_records(_repo_root) or [
-    *_ROUND3_PRIORITY,
-    *[n for n in REGISTRY if n not in set(_ROUND3_PRIORITY)],
-]
-_ordered = {n: REGISTRY[n] for n in _order}
-REGISTRY.clear()
-REGISTRY.update(_ordered)
 
 
 def queries_dict():

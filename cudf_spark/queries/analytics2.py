@@ -476,8 +476,8 @@ def graph_jaccard_neighbors(spark: SparkSession, sf_dir: str) -> DataFrame:
     # edge-iterator INTERSECTION form — per-supplier sorted part arrays
     # + array_intersect over the candidate pair set, deg riding in the
     # array table — measured 14.0 s min-of-3 fresh-process warm vs
-    # 4.83 s for this join form (sf0.1, interleaved same-session-day;
-    # scripts/ab_graph_r11.py harness). Root cause, completing the r10
+    # 4.83 s for this join form (sf0.1, interleaved same-session-day,
+    # fresh process per variant). Root cause, completing the r10
     # boundary note: triangle gets its candidate pairs FOR FREE (they
     # are the edges); in the bipartite common-neighbor shape the
     # candidates ARE the quadratic expansion, so the variant pays the
@@ -3441,7 +3441,7 @@ def graph_adamic_adar(spark: SparkSession, sf_dir: str) -> DataFrame:
     # expansion, then array_intersect of per-supplier part arrays with
     # shared-weight sums recovered via a broadcast (p, w) join on the
     # exploded intersection — measured 14.1 s min-of-3 fresh-process
-    # warm vs 7.6 s for this form (scripts/ab_graph_r11.py). Same root cause
+    # warm vs 7.6 s for this form (sf0.1). Same root cause
     # as graph_jaccard_neighbors' r11 note: without a given pair set the
     # candidates cost the full self-join shuffle before the intersect
     # starts, so the variant is the base plan plus extra work. Both

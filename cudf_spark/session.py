@@ -1,8 +1,8 @@
 """SparkSession factory tuned for the engine.
 
-Local testing runs ``local[$SPARK_GRAFT_CPUS]`` (default 32 threads, one
-JVM); the configuration below is chosen so the *same plans* scale to a
-multi-executor cluster at 100 TB:
+Local testing runs ``local[$SPARK_GRAFT_CPUS]`` (default: the host's core
+count, one JVM); the configuration below is chosen so the *same plans*
+scale to a multi-executor cluster at 100 TB:
 
 - AQE on (runtime re-plan: broadcast conversion, partition coalescing,
   skew-join splitting) — mirrors cudf-polars' deferred broadcast-vs-shuffle
@@ -22,7 +22,7 @@ from pyspark.sql import SparkSession
 
 
 def get_spark(app_name: str = "cudf_spark", *, shuffle_partitions: int | None = None) -> SparkSession:
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = os.environ.get("SPARK_GRAFT_CPUS", str(os.cpu_count()))
     parts = shuffle_partitions or int(cpus)
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")

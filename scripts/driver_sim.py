@@ -30,16 +30,11 @@ def vhash(cols, rows):
     return hashlib.md5(json.dumps(norm).encode()).hexdigest()[:12]
 
 qs, oracles = mod.queries(), mod.oracle_sql()
-# Optional subset (round-boundary smoke): DRIVER_SIM_ONLY="@pins" runs the
-# latest JUDGE_PINS cohort; or a comma-separated name list. Default (unset)
-# is the full registry, exactly as the driver runs it.
+# Optional subset: DRIVER_SIM_ONLY is a comma-separated name list. Default
+# (unset) is the full registry, exactly as the driver runs it.
 only = os.environ.get("DRIVER_SIM_ONLY", "").strip()
 if only:
-    if only == "@pins":
-        from cudf_spark.queries import JUDGE_PINS
-        names = JUDGE_PINS[max(JUDGE_PINS)]
-    else:
-        names = set(only.split(","))
+    names = set(only.split(","))
     unknown = names - set(qs)
     assert not unknown, f"DRIVER_SIM_ONLY names not in queries(): {unknown}"
     qs = {n: f for n, f in qs.items() if n in names}

@@ -21,30 +21,9 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+from bench import HEADLINE  # noqa: E402
 
-BASKET = [
-    "q01_pricing_summary",
-    "q03_unshipped_orders",
-    "q05_local_supplier_volume",
-    "q09_product_profit",
-    "q18_large_volume_customer",
-    "agg_kinds_basic",
-    "win_rolling_rows",
-    "dedup_minhash_lsh",
-    "ann_cosine_topk",
-    "stream_sessions",
-    "q02_min_cost_supplier",
-    "dedup_substring_spans",
-    "ann_ivf_topk",
-    "text_quality_gopher",
-    "text_decontaminate",
-    "curation_pipeline",
-    "q21_waiting_supplier",
-    "text_tfidf_topk",
-    "agg_sketch_merge",
-    "dedup_duplicate_clusters",
-]
+SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 
 def main(argv: list[str]) -> int:
@@ -60,7 +39,7 @@ def main(argv: list[str]) -> int:
             tag = argv[i + 1]
             i += 2
         elif argv[i] == "--all-basket":
-            names.extend(BASKET)
+            names.extend(HEADLINE)
             i += 1
         else:
             names.append(argv[i])

@@ -27,7 +27,6 @@ Usage:
     python scripts/fuzz_differential.py                  # seeds 1-5, cohort 80
     python scripts/fuzz_differential.py --seeds 7,8 --cohort 120
     python scripts/fuzz_differential.py --only ewma_per_user --seeds 3
-    FUZZ_SEEDS=2 bash scripts/round_start.sh             # optional stage
 
 The generated trees live under .fuzz/seed{N}/ (gitignored) and are
 deleted on success unless --keep is given.
@@ -299,18 +298,11 @@ def vhash(cols, rows) -> str:
 def cohort_for_seed(names: list[str], seed: int, size: int) -> list[str]:
     """Seed-rotated cohort: a seeded shuffle of the full oracle-backed
     registry, first `size` names — across consecutive seeds the overlap
-    decays, so ≥5 seeds sweep well past 100 distinct queries. The latest
-    JUDGE_PINS cohort is always appended (highest-churn queries)."""
-    from cudf_spark.queries import JUDGE_PINS
-
+    decays, so ≥5 seeds sweep well past 100 distinct queries."""
     rng = np.random.default_rng(10_000 + seed)
     shuffled = list(names)
     rng.shuffle(shuffled)
-    cohort = shuffled[:size]
-    for pin in sorted(JUDGE_PINS[max(JUDGE_PINS)]):
-        if pin in names and pin not in cohort:
-            cohort.append(pin)
-    return cohort
+    return shuffled[:size]
 
 
 def run_seed(spark, seed: int, size: int, keep: bool,

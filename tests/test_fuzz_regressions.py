@@ -7,7 +7,7 @@ MISMATCH/ERROR verbatim. Fixture trees are generated into a tmp dir and
 removed; each seed runs in a couple of seconds at the generator's
 ~sf0.001 scale.
 
-Findings covered (see scripts/fuzz_differential.py and JUDGE_PINS[11]):
+Findings covered (see scripts/fuzz_differential.py):
   seed 1  replace_nan_handling        oracle isnan(NULL) vs cudf BOOL8
   seed 1  misc_consistent_hash_ring   ANSI element_at on empty ring
   seed 2  stream_checkpoint_exactly_once  <2 part files assert, NULL xor
@@ -37,8 +37,7 @@ SEED_QUERIES = [
 ]
 
 # Third wave: hostile full-registry sweeps — the knob is pinned, the rest
-# of the tree still varies with the seed (see JUDGE_PINS[11] for the
-# per-query defect classes).
+# of the tree still varies with the seed.
 HOSTILE = [
     (20, {"empty_table": "lineitem"},
      ["agg_grouping_sets", "agg_rollup", "agg_cube", "stream_dq_monitor"]),

@@ -16,6 +16,9 @@ bounded tables (centroids, BPE merges) during plan construction.
 
 from __future__ import annotations
 
+import re
+from pathlib import Path
+
 import pytest
 from pyspark.sql import types as T
 
@@ -40,3 +43,12 @@ def test_scalar_output_contract(spark, name):
         "the driver canonicalizer cannot hash collection cells — "
         "concat_ws/array_to_string them on both engines"
     )
+
+
+def test_readme_registry_count_matches():
+    """README's "registry: N named queries, M paired" line tracks REGISTRY."""
+    text = (Path(__file__).resolve().parent.parent / "README.md").read_text()
+    oracle_backed = sum(1 for q in REGISTRY.values() if q.oracle is not None)
+    m = re.search(r"registry: (\d+) named queries, (\d+) paired", text)
+    assert m, "README layout line about the registry is missing"
+    assert (int(m.group(1)), int(m.group(2))) == (len(REGISTRY), oracle_backed)

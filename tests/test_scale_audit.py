@@ -112,6 +112,11 @@ def test_flags_sort_resample(spark):
     )
     joined = base.join(F.broadcast(other), "k", "left").orderBy("k")
     assert any(c == "sort_resample" for c, _ in scale_audit(joined))
+    # a '==' inside a plan literal is not a section header: the hash
+    # exchange between Python and the sort still counts as a boundary
+    strs = base.select(F.col("k").cast("string").alias("s"))
+    keyed = strs.repartition(8, F.concat("s", F.lit("YQ=="))).orderBy("s")
+    assert all(c != "sort_resample" for c, _ in scale_audit(keyed))
 
 
 def test_sort_resample_on_executed_aqe_plan_reports_once(spark):
