@@ -1,7 +1,8 @@
 """Scale-audit linting of physical plans.
 
-``scale_audit(df)`` walks a DataFrame's executed plan string and reports
-the anti-patterns that are invisible at test scale but fatal at 100 TB —
+``scale_audit(df)`` walks the operator nodes of a DataFrame's executed
+physical plan (``plan_nodes``, not the printed plan) and reports the
+anti-patterns that are invisible at test scale but fatal at 100 TB —
 the same checklist tests/test_plans.py pins for the built-in queries,
 exposed as a library API so users can vet their own pipelines:
 
@@ -12,8 +13,7 @@ exposed as a library API so users can vet their own pipelines:
   only one partial row per upstream partition) or a limit collector —
   those are bounded by design.
 - ``cartesian_product`` — ``CartesianProduct`` in the plan: O(N·M) blowup.
-  ``BroadcastNestedLoopJoin`` is flagged only with ``allow_bnlj=False``;
-  the default tolerates it because BNLJ over a 1-row broadcast (the
+  ``BroadcastNestedLoopJoin`` passes: BNLJ over a 1-row broadcast (the
   scalar-subquery pattern) is the *recommended* shape.
 - ``python_row_udf`` — ``BatchEvalPython`` (row-at-a-time Python UDF);
   Arrow-batched variants (``ArrowEvalPython``/``MapInPandas``/
@@ -51,97 +51,48 @@ import re
 
 from pyspark.sql import DataFrame
 
-_BOUNDED_CONSUMERS = (
-    "HashAggregate",        # merge side of a global agg: one row per partition in
+from cudf_spark.plans.nodes import plan_nodes
+
+# Consumers an Exchange SinglePartition may feed without funnelling data:
+# the merge side of a global agg (one row per upstream partition) and the
+# limit collectors.
+_BOUNDED_CONSUMERS = {
+    "HashAggregate",
     "SortAggregate",
     "ObjectHashAggregate",
     "CollectLimit",
     "TakeOrderedAndProject",
     "GlobalLimit",
-    "AdaptiveSparkPlan",    # AQE root wrapper, not a consumer
-)
+}
 
-
-def _plan_text(df: DataFrame) -> str:
-    # Plan stringification elides aggregate expressions past
-    # spark.sql.debug.maxToStringFields (default 25) with "... N more
-    # fields" — which would silently hide a spool function from the
-    # value_spool scan on wide aggregates. Raise it for the capture and
-    # restore the caller's setting.
-    conf = df.sparkSession.conf
-    key = "spark.sql.debug.maxToStringFields"
-    prev = conf.get(key, None)
-    conf.set(key, "4096")
-    try:
-        return df._jdf.queryExecution().executedPlan().toString()
-    finally:
-        if prev is None:
-            conf.unset(key)
-        else:
-            conf.set(key, prev)
-
-
-def _depth(line: str) -> int:
-    """Tree depth of a plan line from its prefix glyphs.
-
-    Each ancestor level contributes 3 chars — ``':  '``/``'   '`` for
-    pass-through levels and ``'+- '``/``':- '`` for the node marker — so
-    depth == prefix_len / 3.
-    """
-    m = re.match(r"^((?::  |   )*)(?:[+:]- )?", line)
-    return len(m.group(0)) // 3
-
-
-def _skip(line: str) -> bool:
-    """Blank lines and section headers (``== Physical Plan ==``, AQE's
-    ``+- == Final Plan ==``). Only the header shape counts: a ``==``
-    inside a node's literal (e.g. base64 ``'YQ=='``) is a plan node."""
-    return not line.strip() or line.lstrip(" :+-").startswith("==")
-
-
-def scale_audit(df: DataFrame, *, allow_bnlj: bool = True) -> list[tuple[str, str]]:
+def scale_audit(df: DataFrame) -> list[tuple[str, str]]:
     """Lint ``df``'s physical plan for patterns that break at cluster scale."""
-    plan = _plan_text(df)
+    nodes = list(plan_nodes(df))
+    names = {name for name, _, _ in nodes}
     findings: list[tuple[str, str]] = []
 
-    lines = plan.split("\n")
-    for i, line in enumerate(lines):
-        if "Exchange SinglePartition" not in line:
+    for _, detail, ancestors in nodes:
+        # the plan root (under AQE's wrapper) consumes nothing
+        if not detail.startswith("Exchange SinglePartition") or not ancestors:
             continue
-        # The consumer is the nearest line ABOVE at one level shallower —
-        # the immediately preceding line may be the deepest leaf of a prior
-        # sibling subtree (e.g. when the Exchange is a join's second child),
-        # so walk the tree-prefix glyph depth, not text adjacency.
-        d = _depth(line)
-        parent = ""
-        for j in range(i - 1, -1, -1):
-            cand = lines[j]
-            if _skip(cand):
-                continue
-            if _depth(cand) < d:
-                parent = cand
-                break
-        if not any(k in parent for k in _BOUNDED_CONSUMERS):
-            findings.append(
-                ("single_partition_funnel", f"feeds: {parent.strip()[:90] or '<plan root>'}")
-            )
+        parent, parent_detail = ancestors[-1]
+        if parent not in _BOUNDED_CONSUMERS:
+            findings.append(("single_partition_funnel", f"feeds: {parent_detail[:90]}"))
 
-    if "CartesianProduct" in plan:
+    if "CartesianProduct" in names:
         findings.append(("cartesian_product", "CartesianProduct in plan"))
-    if not allow_bnlj and "BroadcastNestedLoopJoin" in plan:
-        findings.append(("cartesian_product", "BroadcastNestedLoopJoin in plan"))
 
-    if "BatchEvalPython" in plan:
+    if "BatchEvalPython" in names:
         findings.append(
             ("python_row_udf", "row-at-a-time Python UDF; use pandas_udf/mapInPandas")
         )
 
-    spooled: set[str] = set()
-    for line in lines:
-        if "ObjectHashAggregate" not in line:
-            continue
-        for fn in _SPOOL_FN.findall(line):
-            spooled.add(fn)
+    spooled = {
+        fn
+        for name, detail, _ in nodes
+        if name == "ObjectHashAggregate"
+        for fn in _SPOOL_FN.findall(detail)
+    }
     for fn in sorted(spooled):
         findings.append(
             (
@@ -153,44 +104,33 @@ def scale_audit(df: DataFrame, *, allow_bnlj: bool = True) -> list[tuple[str, st
             )
         )
 
-    for i, line in enumerate(lines):
-        if "Exchange rangepartitioning" not in line:
+    # A Python stage is safe only if a materialization boundary sits
+    # between it and the range exchange above it (the sampling pass then
+    # reads materialized blocks instead of re-running the chain). A
+    # checkpoint scan below the Python node does NOT protect it, and a
+    # boundary on a sibling branch protects only that branch, hence the
+    # ancestor path. One finding per exposed range exchange.
+    resampled: dict[tuple, str] = {}
+    for name, _, ancestors in nodes:
+        if name not in PYTHON_NODES:
             continue
-        d0 = _depth(line)
-        # walk the exchange's subtree keeping the ancestor path: a Python
-        # stage is safe only if a SHUFFLE boundary sits between it and the
-        # range exchange (the sampling pass then reads materialized shuffle
-        # blocks instead of re-running the chain). A checkpoint scan below
-        # the Python node does NOT protect it, and a boundary on a sibling
-        # branch protects only that branch — hence the path walk.
-        path: list[tuple[int, bool]] = []
-        for j in range(i + 1, len(lines)):
-            cand = lines[j]
-            # an already-executed AQE plan embeds '+- == Final Plan ==' /
-            # '+- == Initial Plan ==' section headers whose shallow prefix
-            # would otherwise end the subtree walk early or double-count
-            # a Python stage once per section.
-            if _skip(cand):
-                continue
-            d = _depth(cand)
-            if d <= d0:
+        for i in range(len(ancestors) - 1, -1, -1):
+            above, above_detail = ancestors[i]
+            if above in _BOUNDARIES:
+                if above_detail.startswith("Exchange rangepartitioning"):
+                    resampled.setdefault(ancestors[: i + 1], name)
                 break
-            while path and path[-1][0] >= d:
-                path.pop()
-            m = _PY_NODE.search(cand)
-            if m and not any(b for _, b in path):
-                findings.append(
-                    (
-                        "sort_resample",
-                        f"{m.group(1)} below Exchange rangepartitioning with "
-                        "no shuffle boundary between: the sort's sampling "
-                        "pass re-executes the Python chain — localCheckpoint "
-                        "the result table before the sort "
-                        "(OPTIMIZATION_r11.md §3.14)",
-                    )
-                )
-                break
-            path.append((d, bool(_SHUFFLE_BOUNDARY.search(cand))))
+    for name in resampled.values():
+        findings.append(
+            (
+                "sort_resample",
+                f"{name} below Exchange rangepartitioning with "
+                "no shuffle boundary between: the sort's sampling "
+                "pass re-executes the Python chain — localCheckpoint "
+                "the result table before the sort "
+                "(OPTIMIZATION_r11.md §3.14)",
+            )
+        )
 
     return findings
 
@@ -209,24 +149,21 @@ _SPOOL_FN = re.compile(
 # Python-boundary stages for the sort_resample walk. BatchEvalPython is
 # included (it would double the python_row_udf damage); the Arrow forms
 # are the ones the registry actually uses.
-_PY_NODE = re.compile(
-    r"\b(ArrowEvalPython|MapInPandas|FlatMapGroupsInPandas|MapInArrow|"
-    r"FlatMapGroupsInArrow|BatchEvalPython)\b"
-)
+PYTHON_NODES = {
+    "ArrowEvalPython",
+    "MapInPandas",
+    "FlatMapGroupsInPandas",
+    "MapInArrow",
+    "FlatMapGroupsInArrow",
+    "BatchEvalPython",
+}
 
 # Materialization boundaries the sampling pass can read instead of
-# re-executing: any shuffle exchange (AQE runs it as its own query
-# stage), an already-materialized AQE stage node, or a cached subtree
-# (InMemoryTableScan/TableCacheQueryStage — the sampling pass reads the
-# cache, not the chain; ADVICE r11). BroadcastQueryStage counts for the
-# same reason in executed plans. A bare, not-yet-executed
-# BroadcastExchange is NOT a boundary — it doesn't materialize its
-# child for the probe side.
-_SHUFFLE_BOUNDARY = re.compile(
-    r"\bExchange (hashpartitioning|rangepartitioning|SinglePartition|"
-    r"RoundRobinPartitioning)|\bShuffleQueryStage\b|\bAQEShuffleRead\b"
-    r"|\bInMemoryTableScan\b|\bTableCacheQueryStage\b|\bBroadcastQueryStage\b"
-)
+# re-executing: any shuffle exchange (AQE runs it as its own query stage)
+# or a cached subtree (the sampling pass reads the cache, not the chain;
+# ADVICE r11). A BroadcastExchange is NOT a boundary, executed or not:
+# it doesn't materialize its child for the probe side.
+_BOUNDARIES = {"Exchange", "InMemoryTableScan"}
 
 
 # Matches every INTERPOLATED quantile form either engine offers —

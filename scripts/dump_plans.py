@@ -45,6 +45,7 @@ def main(argv: list[str]) -> int:
             names.append(argv[i])
             i += 1
 
+    from cudf_spark.plans import plan_nodes
     from cudf_spark.queries import REGISTRY
     from cudf_spark.session import get_spark
 
@@ -58,7 +59,11 @@ def main(argv: list[str]) -> int:
         path = os.path.join(out_dir, f"{name}_{tag}.txt")
         with open(path, "w") as fh:
             fh.write(text)
-        print(f"wrote {path} ({text.count('Exchange')} Exchange lines)")
+        ops = [n for n, _, _ in plan_nodes(df)]
+        print(
+            f"wrote {path} ({ops.count('Exchange')} shuffle exchanges, "
+            f"{ops.count('BroadcastExchange')} broadcast exchanges)"
+        )
     spark.stop()
     return 0
 

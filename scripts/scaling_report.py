@@ -3,11 +3,14 @@ query, extracted from the live physical plan — the 100 TB design argument
 as a table the judge (or an SRE) can audit at a glance."""
 from __future__ import annotations
 
-import re
+import os
 import sys
+from collections import Counter
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from cudf_spark.plans import plan_nodes  # noqa: E402
+from cudf_spark.plans.audit import PYTHON_NODES  # noqa: E402
 from cudf_spark.queries import REGISTRY  # noqa: E402
 from cudf_spark.session import get_spark  # noqa: E402
 
@@ -29,23 +32,20 @@ def main() -> None:
     rows = []
     for name in HEADLINE:
         df = REGISTRY[name].build(spark, "/root/testdata/sf0.001")
-        p = df._jdf.queryExecution().executedPlan().toString()
-        nx = p.count("Exchange hashpartitioning")
-        keys = sorted(
-            {
-                m.split("#")[0]
-                for m in re.findall(r"Exchange hashpartitioning\(([^#]+)#", p)
-            }
-        )
-        single = p.count("Exchange SinglePartition")
+        nodes = list(plan_nodes(df))
+        names = Counter(n for n, _, _ in nodes)
+        shuffles = [d for _, d, _ in nodes if d.startswith("Exchange hashpartitioning(")]
+        # the first key column of each shuffle, without its expression id
+        keys = sorted({d.split("(", 1)[1].split("#")[0] for d in shuffles})
+        single = sum(1 for _, d, _ in nodes if d.startswith("Exchange SinglePartition"))
         rows.append(
             (
                 name,
-                nx,
+                len(shuffles),
                 ",".join(keys) or "—",
-                p.count("BroadcastHashJoin") + p.count("BroadcastNestedLoopJoin"),
-                p.count("SortMergeJoin"),
-                p.count("BatchEvalPython"),
+                names["BroadcastHashJoin"] + names["BroadcastNestedLoopJoin"],
+                names["SortMergeJoin"],
+                sum(names[n] for n in PYTHON_NODES),
                 single,
             )
         )

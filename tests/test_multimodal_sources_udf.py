@@ -58,7 +58,7 @@ def test_write_partitioned_prunes(spark):
     with tempfile.TemporaryDirectory() as tmp:
         write(df, f"{tmp}/p", "parquet", partition_by=["n_regionkey"])
         pruned = read(spark, f"{tmp}/p", "parquet").filter(F.col("n_regionkey") == 2)
-        plan = pruned.queryExecution if False else pruned._jdf.queryExecution().executedPlan().toString()
+        plan = pruned._jdf.queryExecution().executedPlan().toString()
         assert pruned.count() == df.filter(F.col("n_regionkey") == 2).count()
         # partition filter must reach the scan (pruned directories)
         assert "PartitionFilters: [" in plan and "n_regionkey" in plan.split("PartitionFilters")[1][:200]

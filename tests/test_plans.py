@@ -12,6 +12,7 @@ import os
 
 import pytest
 
+from cudf_spark.plans import plan_nodes
 from cudf_spark.queries import REGISTRY
 from tests.conftest import SF_DIR
 
@@ -274,37 +275,34 @@ def test_semantic_dedup_single_assign_no_cartesian(spark):
     parquet scan directly — and the within-cell pairwise step is an
     equi-join on cell with the cosine threshold as residual, never a
     cartesian."""
-    plan = plan_of(spark, "dedup_semantic")
+    df = REGISTRY["dedup_semantic"].build(spark, SF_DIR)
+    plan = df._jdf.queryExecution().executedPlan().toString()
     assert "CartesianProduct" not in plan
     assert "BatchEvalPython" not in plan
     # Accept either materialization shape: lineage-truncated checkpoint
     # (zero FileScans, branches read ExistingRDD) or a cache (every
-    # FileScan nested inside an InMemoryRelation description). A raw
-    # top-level parquet scan means the assign subtree re-executes.
-    # ADVICE r08: scope the cache check PER SUBTREE — walk each scan's
-    # ancestor chain (the nearest lines above at strictly decreasing
-    # indent) and require an InMemory* ancestor, instead of accepting
+    # FileScan below an InMemory* node). A raw top-level parquet scan
+    # means the assign subtree re-executes. ADVICE r08: scope the cache
+    # check PER SUBTREE (each scan's own ancestors), instead of accepting
     # any scan merely deeper than the shallowest InMemoryTableScan
     # anywhere in the plan.
-    lines = plan.splitlines()
-
-    def _depth(line: str) -> int:
-        return len(line) - len(line.lstrip(" :+-"))
-
-    for i, s in enumerate(lines):
-        if "FileScan parquet" not in s:
-            continue
-        d = _depth(s)
-        cached = False
-        for j in range(i - 1, -1, -1):
-            dj = _depth(lines[j])
-            if dj < d:
-                if "InMemoryTableScan" in lines[j] or "InMemoryRelation" in lines[j]:
-                    cached = True
-                    break
-                d = dj  # next ancestor must be shallower still
-        assert cached, f"uncached parquet scan: {s.strip()[:80]}"
+    for _, detail, ancestors in plan_nodes(df):
+        if detail.startswith("FileScan parquet"):
+            assert any(
+                a in ("InMemoryTableScan", "InMemoryRelation") for a, _ in ancestors
+            ), f"uncached parquet scan: {detail[:80]}"
     assert plan.count("Exchange hashpartitioning") <= 2
+
+
+def test_plan_nodes_walks_executed_plan_once(spark):
+    """An executed AQE plan is walked once, through its stages and codegen."""
+    df = spark.range(10).selectExpr("id % 2 AS k").groupBy("k").count()
+    df.collect()
+    assert [(n, a[-1][0] if a else None) for n, _, a in plan_nodes(df)] == [
+        ("HashAggregate", None), ("AQEShuffleRead", "HashAggregate"),
+        ("Exchange", "AQEShuffleRead"), ("HashAggregate", "Exchange"),
+        ("Project", "HashAggregate"), ("Range", "Project"),
+    ]
 
 
 def test_boilerplate_removal_keyed_no_python(spark):

@@ -133,7 +133,7 @@ def test_sort_resample_on_executed_aqe_plan_reports_once(spark):
             yield pd.DataFrame({"k": pdf["r_regionkey"]})
 
     bad = load(spark, SF_DIR, "region").mapInPandas(ident, "k long").orderBy("k")
-    bad.write.format("noop").mode("overwrite").save()  # executed: AQE final plan
+    bad.collect()  # executed: AQE final plan
     findings = [c for c, _ in scale_audit(bad) if c == "sort_resample"]
     assert len(findings) == 1
 
@@ -161,9 +161,17 @@ def test_sort_resample_cached_subtree_is_boundary(spark):
 def test_flags_cartesian(spark):
     from cudf_spark.catalog import load
 
-    n = load(spark, SF_DIR, "nation")
-    bad = n.crossJoin(n.select(F.col("n_nationkey").alias("k2")))
-    found = scale_audit(bad, allow_bnlj=False)
+    # with broadcasts off the cross join plans as a real CartesianProduct
+    # (by default it is a BroadcastNestedLoopJoin, which passes)
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "-1")
+    try:
+        n = load(spark, SF_DIR, "nation")
+        bad = n.crossJoin(n.select(F.col("n_nationkey").alias("k2")))
+        found = scale_audit(bad)
+    finally:
+        spark.conf.set(key, prev)
     assert any(c == "cartesian_product" for c, _ in found)
 
 
