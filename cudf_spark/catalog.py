@@ -5,11 +5,23 @@ The driver materializes ten deterministic parquet tables per scale factor
 every query goes through ``spark.read.parquet`` — the DataSource V2 scan
 with column pruning + predicate pushdown (the Spark analogue of libcudf's
 ``read_parquet`` AST filter pushdown, cpp/include/cudf/io/parquet.hpp:94).
+
+Each file's schema is resolved once per process, like the schema a
+cudf-polars ``Scan`` carries: the first read infers it (a one-task Spark job
+over the footer), later reads pass it to ``spark.read.schema``. The cache key
+is the path, the file's ``st_mtime_ns`` and ``st_size`` (a rewritten file is
+inferred again), and the session's ``spark.sql.legacy.parquet.nanosAsLong``
+value (under it a nanosecond ``events.ts`` is inferred as bigint). Every read
+still builds a fresh relation with new attribute ids, so self-joins stay
+unambiguous.
 """
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 TABLES = (
     "region",
@@ -27,6 +39,27 @@ TABLES = (
 # Dimension tables small enough to broadcast at any scale factor — a
 # broadcast hint on these is always correct (region/nation are fixed-size).
 BROADCAST_DIMS = frozenset({"region", "nation"})
+
+NANOS_AS_LONG = "spark.sql.legacy.parquet.nanosAsLong"
+# Process-wide: the key pins the file's version and the one conf that changes
+# inference, so every session and caller may share an entry.
+_SCHEMAS: dict[tuple, StructType] = {}
+
+
+def read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)``, inferring the schema only on the first
+    read of this version of the file (see the module docstring)."""
+    try:
+        st = os.stat(path)
+    except OSError:  # missing or non-local path: Spark raises its own error
+        return spark.read.parquet(path)
+    key = (path, st.st_mtime_ns, st.st_size, spark.conf.get(NANOS_AS_LONG))
+    schema = _SCHEMAS.get(key)
+    if schema is not None:
+        return spark.read.schema(schema).parquet(path)
+    df = spark.read.parquet(path)
+    _SCHEMAS[key] = df.schema
+    return df
 
 
 def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -51,12 +84,12 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if name == "events":
         from pyspark.sql import functions as F
 
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
+        spark.conf.set(NANOS_AS_LONG, "true")
+        df = read_parquet(spark, f"{sf_dir}/{name}.parquet")
         if dict(df.dtypes).get("ts") == "bigint":  # nanos-as-long vintage
             return df.withColumn("ts", F.expr("timestamp_micros(ts div 1000)"))
         return df.withColumn("ts", F.col("ts").cast("timestamp"))
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    return read_parquet(spark, f"{sf_dir}/{name}.parquet")
 
 
 def register_views(spark: SparkSession, sf_dir: str) -> None:

@@ -13,6 +13,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from cudf_spark.catalog import read_parquet
+
 
 def events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """``events`` as a file-source stream (the parquet-channel analogue of
@@ -27,7 +29,7 @@ def events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     # value in that case instead of leaking the override
     prev = spark.conf.get("spark.sql.legacy.parquet.nanosAsLong", None)
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
+    schema = read_parquet(spark, f"{sf_dir}/events.parquet").schema
     needs_legacy = dict((f.name, f.dataType.simpleString()) for f in schema).get(
         "ts"
     ) == "bigint"
@@ -300,11 +302,7 @@ def enrich_with_static(
 def user_tier_dim(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Static per-user dimension derived deterministically from the events
     table's user universe (stand-in for an external user-profile table)."""
-    users = (
-        spark.read.parquet(f"{sf_dir}/events.parquet")
-        .select("user_id")
-        .distinct()
-    )
+    users = read_parquet(spark, f"{sf_dir}/events.parquet").select("user_id").distinct()
     return users.select(
         "user_id",
         F.when(F.col("user_id") % 3 == 0, F.lit("gold"))

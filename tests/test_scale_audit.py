@@ -67,7 +67,9 @@ def test_flags_value_spool(spark):
 
 def test_value_spool_survives_wide_aggregates(spark):
     """A spool function past the default 25-field stringification cutoff
-    must still be seen (audit raises maxToStringFields for the capture)."""
+    must still be seen: the audit reads each node's ``simpleString(4096)``,
+    which prints every aggregate function, and never touches
+    ``maxToStringFields``."""
     from cudf_spark.catalog import load
 
     li = load(spark, SF_DIR, "lineitem")
@@ -120,10 +122,10 @@ def test_flags_sort_resample(spark):
 
 
 def test_sort_resample_on_executed_aqe_plan_reports_once(spark):
-    """ADVICE r11: an already-executed AQE plan embeds '== Final Plan =='
-    / '== Initial Plan ==' section headers; the subtree walk must skip
-    them (not mis-scope at depth 0) and must not report the same Python
-    stage once per section."""
+    """ADVICE r11: an already-executed AQE plan holds both its final and
+    its initial plan; the node walk goes through ``AdaptiveSparkPlan`` to
+    the final plan only, so the Python stage below the sort is reported
+    once, not once per plan."""
     import pandas as pd
 
     from cudf_spark.catalog import load
