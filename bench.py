@@ -33,32 +33,25 @@ HEADLINE = [
     "dedup_minhash_lsh",
     "ann_cosine_topk",
     "stream_sessions",
-    # round 2 additions: correlated-subquery TPC-H shape, substring dedup,
-    # IVF vector search, Gopher quality gating
+    # correlated-subquery TPC-H shape, substring dedup, IVF vector search,
+    # Gopher quality gating
     "q02_min_cost_supplier",
     "dedup_substring_spans",
     "ann_ivf_topk",
     "text_quality_gopher",
-    # round 2b: eval-set decontamination (explode + broadcast gram join)
+    # eval-set decontamination (explode + broadcast gram join)
     "text_decontaminate",
-    # round 2c: the full dedup->quality->decontaminate->split->pack DAG
+    # the full dedup->quality->decontaminate->split->pack DAG
     "curation_pipeline",
-    # round 3: heaviest remaining TPC-H shape (double lineitem agg +
-    # semi/anti exists), and the most shuffle-intensive text family
+    # heaviest TPC-H shape (double lineitem agg + semi/anti exists), and
+    # the most shuffle-intensive text family
     "q21_waiting_supplier",
     "text_tfidf_topk",
-    # round 3b: persisted-sketch merge and iterative cluster resolution
+    # persisted-sketch merge and iterative cluster resolution
     "agg_sketch_merge",
     "dedup_duplicate_clusters",
 ]
-# Round-4 kept the basket FROZEN at these 20 so round-over-round deltas stay
-# readable (VERDICT r03 item 7). Round-5 candidates, measured healthy at
-# sf0.1 during round 4: dedup_semantic 1.6s, text_bigram_loglik 1.5s,
-# retrieval_rrf_fusion 1.5s, text_remove_boilerplate 0.7s,
-# join_range_binned 0.4s, sketch_bloom_filter; second session added more
-# measured-healthy options: graph_pagerank ~1s, ann_pq_topk ~1s,
-# stream_cms_heavy_hitters (real micro-batch) ~3s, text_bpe_train ~7s,
-# text_sparse_cosine_pairs ~1s, curation_pipeline_v2.
+# The basket is frozen so totals stay comparable from one change to the next.
 
 
 def main() -> None:
@@ -72,10 +65,6 @@ def main() -> None:
     # engine, not first-call JIT.
     REGISTRY["q01_pricing_summary"].build(spark, sf_dir).write.format("noop").mode("overwrite").save()
 
-    # Per query: min of 2 executions = steady-state throughput. The first
-    # run pays one-off Python plan construction + whole-stage codegen
-    # compilation, which amortizes to zero on a long-lived cluster; the
-    # data-path work (scan/shuffle/agg) is identical in both runs.
     # Iterative queries (connected components) execute their rounds
     # EAGERLY during build(), so build must sit inside the timer for them;
     # for everything else build is one-off Python plan construction that
@@ -86,17 +75,10 @@ def main() -> None:
     samples: dict[str, list[float]] = {}
     for name in HEADLINE:
         best = None
-        # One UNTIMED warm-up execution, then three timed runs (min).
-        # Measured round 6: q18's per-run times in a warm JVM decay
-        # 0.94 -> 0.67 -> 0.60 -> 0.55 s — the first two executions still
-        # pay whole-stage-codegen compilation + JIT warm-up of the
-        # generated classes, so min-of-2-with-no-warmup sampled warm-up,
-        # not steady state (the source of q18's phantom r3->r5 "regression"
-        # on unchanged code). On a long-lived cluster every query past its
-        # first few runs is steady-state; that is what the basket measures.
-        # VERDICT r10 item 3: min-of-3 (was min-of-2) and every sample
-        # emitted under "queries_all", so round-over-round deltas are
-        # interpretable without the ±15% single-run noise-band caveat.
+        # One UNTIMED warm-up execution, then three timed runs (min): the
+        # first executions still pay whole-stage-codegen compilation and
+        # JIT warm-up, and the basket measures steady state. Every sample
+        # is emitted under "queries_all" so the spread is visible.
         for run in range(4):
             if name in iterative:
                 t0 = time.perf_counter()
@@ -116,7 +98,6 @@ def main() -> None:
             # RDDs, not SQL cache entries): lazily-returned DataFrames
             # leak one per materialization site per run, and the
             # accumulation taxes every later query in the basket
-            # (round-9 root cause of late-session wall-clock inflation)
             _it = (
                 spark.sparkContext._jsc.sc()
                 .getPersistentRDDs()

@@ -21,6 +21,7 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
 TABLES = (
@@ -62,8 +63,8 @@ def read_parquet(spark: SparkSession, path: str) -> DataFrame:
     return df
 
 
-def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Read one fixture table at the given scale-factor directory.
+def normalize_events_ts(events: DataFrame) -> DataFrame:
+    """Microsecond session-tz ``ts`` for either ``events`` fixture vintage.
 
     ``events.ts`` has shipped as both TIMESTAMP(NANOS) and TIMESTAMP(MICROS)
     across fixture generations, so normalize by inspecting the read schema:
@@ -71,10 +72,18 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     vectorized reader rejects nanos otherwise) and are truncated to
     microsecond TimestampType — the documented semantic delta for cudf's
     TIMESTAMP_NANOSECONDS (SURVEY §1.2); micros arrive as TIMESTAMP_NTZ and
-    are cast to session-tz TimestampType (a no-op under the UTC pin below).
-    Either way the result matches DuckDB's ``CAST(ts AS TIMESTAMP)`` on the
-    oracle side.
+    are cast to session-tz TimestampType (a no-op under the UTC pin in
+    :func:`load`). Either way the result matches DuckDB's
+    ``CAST(ts AS TIMESTAMP)`` on the oracle side.
     """
+    if dict(events.dtypes).get("ts") == "bigint":  # nanos-as-long vintage
+        return events.withColumn("ts", F.expr("timestamp_micros(ts div 1000)"))
+    return events.withColumn("ts", F.col("ts").cast("timestamp"))
+
+
+def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """Read one fixture table at the given scale-factor directory
+    (``events`` through :func:`normalize_events_ts`)."""
     if name not in TABLES:
         raise KeyError(f"unknown fixture table {name!r}; expected one of {TABLES}")
     # Every query's timestamp literals / date_format renderings assume UTC
@@ -82,13 +91,8 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     # built itself, so pin the tz here rather than in our session builder.
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     if name == "events":
-        from pyspark.sql import functions as F
-
         spark.conf.set(NANOS_AS_LONG, "true")
-        df = read_parquet(spark, f"{sf_dir}/{name}.parquet")
-        if dict(df.dtypes).get("ts") == "bigint":  # nanos-as-long vintage
-            return df.withColumn("ts", F.expr("timestamp_micros(ts div 1000)"))
-        return df.withColumn("ts", F.col("ts").cast("timestamp"))
+        return normalize_events_ts(read_parquet(spark, f"{sf_dir}/{name}.parquet"))
     return read_parquet(spark, f"{sf_dir}/{name}.parquet")
 
 

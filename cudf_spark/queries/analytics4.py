@@ -2166,7 +2166,7 @@ _IO_AGG_ORACLE = """
     "the builder projects events to primitives, writes spec-conformant "
     "OCF part-files (one per partition, deflate codec) to a temp dir "
     "through the distributed mapInPandas sink, reads them back through "
-    "the binaryFile-based distributed reader, and aggregates — the "
+    "the byte-range distributed reader, and aggregates — the "
     "oracle computes the same aggregate straight from parquet, so any "
     "encode/decode corruption (varint, zigzag, sync markers, codec) "
     "hash-mismatches. Temp dir removed in a finally.",
@@ -2186,8 +2186,8 @@ def io_avro_roundtrip_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     tmp = tempfile.mkdtemp(prefix="avro_rt_")
     try:
-        files = write_avro_dataframe(ev, tmp, codec="deflate")
-        back = read_avro(spark, tmp, schema_file=files[0][0])
+        write_avro_dataframe(ev, tmp, codec="deflate")
+        back = read_avro(spark, tmp)
         out = (
             back.groupBy("event_type")
             .agg(

@@ -1,105 +1,7 @@
 """Sources & sinks — the cudf I/O surface (SURVEY §2.1, cpp/src/io/:
-parquet/orc/csv/json/avro read+write, ~102k LoC of kernels) mapped onto
-Spark's DataSource framework, which already provides projection/predicate
-pushdown, chunked reads (file splits), and compression codecs.
+parquet/orc/csv/json/avro read+write). Parquet, ORC, CSV, JSON and text
+are Spark built-ins (``spark.read.format(fmt)``, ``df.write.format(fmt)``),
+which already provide projection/predicate pushdown, file splits and
+compression codecs. Avro needs the spark-avro jar, so :mod:`.avro`
+implements the container-file spec directly.
 """
-
-from __future__ import annotations
-
-from pyspark.sql import DataFrame, SparkSession
-
-FORMATS = ("parquet", "orc", "csv", "json", "avro", "text")
-
-
-def read(spark: SparkSession, path: str, fmt: str = "parquet", schema=None, **options) -> DataFrame:
-    """Uniform reader. CSV/JSON take an explicit schema in production paths
-    (inference is a full extra pass at 100 TB)."""
-    if fmt not in FORMATS:
-        raise ValueError(f"unsupported format {fmt!r}")
-    reader = spark.read
-    if schema is not None:
-        reader = reader.schema(schema)
-    if fmt == "csv":
-        options.setdefault("header", "true")
-    if fmt == "avro":
-        # Prefer the spark-avro datasource when its jar is present; fall
-        # back to the pure-Python spec reader (sources/avro.py — binaryFile
-        # listing + mapInPandas decode) when it is not.
-        try:
-            return reader.format("avro").options(**options).load(path)
-        except Exception as exc:
-            # Only the missing-datasource failure falls back to the Python
-            # spec reader; a genuine load error with the jar present (bad
-            # path, corrupt file) must surface, not be silently retried.
-            # NOT a bare "AVRO" substring: jar-present read errors carry
-            # AVRO_* error classes (e.g. AVRO_INCOMPATIBLE_READ_TYPE) in
-            # their message and must surface, not fall back.
-            msg = str(exc)
-            if not any(
-                s in msg
-                for s in (
-                    "Failed to find data source",
-                    "Failed to find the data source",
-                    "ClassNotFoundException",
-                    "DATA_SOURCE_NOT_FOUND",
-                )
-            ):
-                raise
-            import glob as _glob
-            import os as _os
-
-            from cudf_spark.sources.avro import read_avro
-
-            cands = sorted(_glob.glob(_os.path.join(path, "*.avro")))
-            if not cands and path.endswith(".avro"):
-                cands = [path]
-            if not cands:  # pragma: no cover - nothing to infer schema from
-                raise RuntimeError(
-                    "avro: spark-avro jar absent and no .avro file found to "
-                    "infer a schema from"
-                )
-            # spark-avro's `avroSchema` option (reader-schema JSON) maps
-            # onto the spec reader's schema resolution, so evolution works
-            # through the uniform API with or without the jar
-            reader_schema = options.get("avroSchema")
-            if isinstance(reader_schema, str):
-                import json as _json
-
-                reader_schema = _json.loads(reader_schema)
-            df = read_avro(
-                spark,
-                path,
-                schema_file=cands[0],
-                schema=None if reader_schema is not None else schema,
-                reader_schema=reader_schema,
-            )
-            if schema is not None and reader_schema is not None:
-                # drop-in parity with the jar path, where .schema(...)
-                # shapes the OUTPUT while avroSchema drives resolution:
-                # project the resolved frame onto the explicit schema
-                from pyspark.sql import functions as F
-                from pyspark.sql.types import _parse_datatype_string
-
-                target = (
-                    _parse_datatype_string(schema)
-                    if isinstance(schema, str)
-                    else schema
-                )
-                df = df.select(
-                    *[F.col(f.name).cast(f.dataType) for f in target.fields]
-                )
-            return df
-    return reader.format(fmt).options(**options).load(path)
-
-
-def write(df: DataFrame, path: str, fmt: str = "parquet", mode: str = "overwrite", partition_by=None, **options) -> None:
-    """Uniform writer; ``partition_by`` maps to hive-style directory
-    partitioning (the scan-pruning layout for 100 TB tables)."""
-    if fmt not in FORMATS:
-        raise ValueError(f"unsupported format {fmt!r}")
-    writer = df.write.mode(mode)
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
-    if fmt == "csv":
-        options.setdefault("header", "true")
-    writer.format(fmt).options(**options).save(path)

@@ -6,13 +6,17 @@ datasource module is a separate jar that is absent from this environment,
 so this module implements the Avro Object Container File spec (public:
 https://avro.apache.org/docs/current/specification/) directly:
 
-* files are listed and shipped by Spark's ``binaryFile`` source — one
-  task per file, so a directory of Avro part-files decodes in parallel
-  across the cluster exactly like any multi-file scan;
+* :func:`read_avro` carves each file into byte ranges of the session's
+  ``spark.sql.files.maxPartitionBytes`` on the driver, and each task
+  decodes the sync-delimited blocks that start in its range (the Hadoop
+  AvroInputFormat split protocol): a small part-file is one range, a
+  single huge file is many ranges spread across tasks;
 * each task parses the header (magic, metadata map with embedded JSON
-  schema, 16-byte sync marker) and walks the sync-delimited blocks,
-  decoding zigzag-varint primitives per the spec — no row-at-a-time
-  Python UDF: decoding happens inside one Arrow ``mapInPandas`` pass;
+  schema, 16-byte sync marker) and walks the blocks, decoding
+  zigzag-varint primitives per the spec — no row-at-a-time Python UDF:
+  decoding happens inside one Arrow ``mapInPandas`` pass. Tasks open
+  files by path, so on a cluster the files must sit on a shared
+  filesystem;
 * ``null`` and ``deflate`` codecs via the stdlib, ``snappy`` via pyarrow.
 
 Scope (documented): record schemas over the primitive types
@@ -32,12 +36,7 @@ or fixed (big-endian two's-complement unscaled int → ``decimal(p,s)``);
 unrecognized logical types fall back to their base type per the spec.
 Recursive (self-referential) record schemas raise NotImplementedError —
 Spark's static struct types cannot represent them. Nesting composes
-recursively. Within-file block parallelism:
-:func:`read_avro_split` carves files into byte ranges and decodes only
-the sync-delimited blocks starting in each range (the Hadoop
-AvroInputFormat split protocol) for the few-huge-files layout;
-:func:`read_avro` stays one-task-per-file for the common many-part-files
-layout. This exceeds the reference's scope, which is read-only
+recursively. This exceeds the reference's scope, which is read-only
 primitives + nullable unions (cpp/src/io/avro/avro.cpp schema walk).
 """
 
@@ -587,9 +586,7 @@ def _decode_block(
     src, codec, sync, fields, named, schema, reader_schema, named_r, out_names
 ) -> list[tuple]:
     """Decode ONE sync-delimited block from ``src`` (positioned at the
-    block's object count). Shared by the whole-file and byte-range
-    readers — the round-8 review found the ~25-line loop copy-pasted in
-    both, where a schema-resolution fix would have to land twice."""
+    block's object count)."""
     n_objects = _read_long(src)
     block = _decompress(_read_bytes(src), codec)
     if src.read(16) != sync:
@@ -612,41 +609,6 @@ def _decode_block(
     return rows
 
 
-def _decode_file(
-    content: bytes, reader_schema: dict | None = None
-) -> tuple[list[tuple], list[str]]:
-    buf = io.BytesIO(content)
-    schema, codec, sync = _parse_header(buf)
-    if schema.get("type") != "record":
-        raise NotImplementedError("only top-level record schemas supported")
-    schema, named = _prepare_schema(schema)
-    fields = schema["fields"]
-    named_r: dict = {}
-    if reader_schema is not None:
-        reader_schema, named_r = _prepare_schema(reader_schema)
-    out_names = (
-        [f["name"] for f in reader_schema["fields"]]
-        if reader_schema is not None
-        else None
-    )
-    rows: list[tuple] = []
-    while True:
-        head = buf.read(1)
-        if not head:
-            break
-        buf.seek(-1, 1)
-        rows.extend(
-            _decode_block(
-                buf, codec, sync, fields, named, schema, reader_schema,
-                named_r, out_names,
-            )
-        )
-    out_fields = (
-        reader_schema["fields"] if reader_schema is not None else fields
-    )
-    return rows, [f["name"] for f in out_fields]
-
-
 def avro_spark_schema(path: str) -> tuple[str, dict]:
     """DDL schema string from one file's header (driver-side peek; at
     cluster scale read the first part-file through the FileSystem API)."""
@@ -658,58 +620,6 @@ def avro_spark_schema(path: str) -> tuple[str, dict]:
         for f in qschema["fields"]
     ]
     return ", ".join(parts), schema
-
-
-def _reader_ddl(schema, reader_schema: dict | None, schema_file: str) -> str:
-    """Spark DDL for a reader call: derived from the reader schema when
-    resolution is on (an explicit ``schema`` would silently conflict, so
-    passing both is an error), else the explicit ``schema``, else the
-    header of ``schema_file``."""
-    if reader_schema is not None:
-        if schema is not None:
-            raise ValueError(
-                "schema and reader_schema are mutually exclusive: with "
-                "resolution on, the output schema IS the reader schema"
-            )
-        qreader, named_r = _prepare_schema(reader_schema)
-        return ", ".join(
-            f"`{f['name']}` {_spark_type(f['type'], named_r)}"
-            for f in qreader["fields"]
-        )
-    return schema if schema is not None else avro_spark_schema(schema_file)[0]
-
-
-def read_avro(
-    spark: SparkSession,
-    path: str,
-    *,
-    schema_file: str,
-    schema=None,
-    reader_schema: dict | None = None,
-) -> DataFrame:
-    """Distributed Avro read: ``binaryFile`` listing + per-file decode in
-    one Arrow ``mapInPandas`` pass. ``schema_file`` is any one part-file
-    whose header defines the (homogeneous) schema; an explicit ``schema``
-    (DDL string or StructType) overrides the header-derived one.
-
-    ``reader_schema`` (an Avro schema dict) turns on spec schema
-    resolution: each file decodes under ITS OWN writer schema, then
-    adapts to the reader schema (reader-only fields take defaults,
-    writer-only fields drop, numeric/string promotions apply) — so a
-    directory of part-files written across schema versions reads as one
-    uniform DataFrame, which is the point of Avro evolution."""
-    ddl = _reader_ddl(schema, reader_schema, schema_file)
-    files = spark.read.format("binaryFile").load(path)
-
-    def decode(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            for content in pdf["content"]:
-                rows, names = _decode_file(bytes(content), reader_schema)
-                yield pd.DataFrame(rows, columns=names)
-
-    return files.select("content").mapInPandas(decode, schema=ddl)
 
 
 def _scan_sync(fh, sync: bytes, from_pos: int, end: int, chunk: int = 1 << 20):
@@ -778,32 +688,45 @@ def _decode_file_range(
         return rows, names
 
 
-def read_avro_split(
+def read_avro(
     spark: SparkSession,
     path: str,
     *,
-    schema_file: str,
     schema=None,
-    split_bytes: int = 32 << 20,
     reader_schema: dict | None = None,
 ) -> DataFrame:
-    """Block-parallel Avro read: each file is carved into ``split_bytes``
-    byte ranges on the driver (size listing only — no data read) and
-    every task decodes only the sync-delimited blocks that START inside
-    its range. This is the within-file parallelism :func:`read_avro`'s
-    one-task-per-file shape lacks — it matters for the few-huge-files
-    layout (a single 10 GB Avro dump decodes on ~300 tasks instead
-    of 1).
+    """Distributed Avro read of one file or a directory of part-files.
 
-    Tasks ``open()`` files directly, so the path must be visible on
-    every executor (shared filesystem mount — the same caveat as
-    :func:`write_avro_dataframe`; an object-store variant would route
-    the ranged reads through the Hadoop FileSystem API instead).
+    Each file is carved on the driver into byte ranges of the session's
+    ``spark.sql.files.maxPartitionBytes`` (a size listing; no data is
+    read), and every task decodes only the sync-delimited blocks that
+    START inside its range, in one Arrow ``mapInPandas`` pass. A file
+    smaller than the split size is one range, decoded by one task; a
+    single huge file decodes on many. The output schema comes from the header
+    of the first file in sorted order; an explicit ``schema`` (DDL
+    string or StructType) overrides it.
+
+    ``reader_schema`` (an Avro schema dict) turns on spec schema
+    resolution: each file decodes under ITS OWN writer schema, then
+    adapts to the reader schema (reader-only fields take defaults,
+    writer-only fields drop, numeric/string promotions apply), so a
+    directory of part-files written across schema versions reads as one
+    uniform DataFrame. The output schema then IS the reader schema, so
+    passing ``schema`` too is an error.
+
+    Tasks ``open()`` files by path, so on a cluster the path must be on
+    a filesystem every executor mounts (the same requirement as
+    :func:`write_avro_dataframe`); an object-store variant would route
+    the ranged reads through the Hadoop FileSystem API instead.
     """
     import glob as globmod
     import os
 
-    ddl = _reader_ddl(schema, reader_schema, schema_file)
+    if reader_schema is not None and schema is not None:
+        raise ValueError(
+            "schema and reader_schema are mutually exclusive: with "
+            "resolution on, the output schema IS the reader schema"
+        )
     if os.path.isdir(path):
         files = sorted(
             p
@@ -811,16 +734,22 @@ def read_avro_split(
             if os.path.isfile(p) and not os.path.basename(p).startswith(("_", "."))
         )
     else:
-        files = [path]
+        files = [path] if os.path.isfile(path) else []
+    split = spark._jsparkSession.sessionState().conf().filesMaxPartitionBytes()
     splits = []
     for p in files:
         size = os.path.getsize(p)
-        start = 0
-        while start < size:
-            splits.append((p, start, min(start + split_bytes, size)))
-            start += split_bytes
+        splits += [(p, s, min(s + split, size)) for s in range(0, size, split)]
     if not splits:
         raise ValueError(f"no avro files under {path!r}")
+    if reader_schema is not None:
+        qreader, named_r = _prepare_schema(reader_schema)
+        ddl = ", ".join(
+            f"`{f['name']}` {_spark_type(f['type'], named_r)}"
+            for f in qreader["fields"]
+        )
+    else:
+        ddl = schema if schema is not None else avro_spark_schema(files[0])[0]
     sdf = spark.createDataFrame(
         splits, "path string, start long, end long"
     ).repartition(len(splits))
@@ -1085,7 +1014,7 @@ def write_avro_dataframe(
 ) -> list[tuple[str, int]]:
     """Distributed Avro sink: one spec-conformant part-file per partition,
     written inside a single Arrow ``mapInPandas`` pass (the write-side
-    mirror of :func:`read_avro`'s per-file decode). Returns
+    mirror of :func:`read_avro`'s decode). Returns
     [(file, n_rows), ...].
 
     The target must be visible to every executor — on a real cluster that
@@ -1133,8 +1062,7 @@ def write_avro(
 ) -> None:
     """Minimal Avro writer (spec-conformant). ``rows_per_block`` splits
     the output into multiple sync-delimited blocks (default: one block),
-    which is what makes a file range-splittable for
-    :func:`read_avro_split`.
+    which is what makes a file range-splittable for :func:`read_avro`.
 
     NaN policy: values arrive through pandas (``write_avro_dataframe``'s
     ``mapInPandas``), where a float column's NULL IS NaN — so for a

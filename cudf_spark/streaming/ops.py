@@ -13,14 +13,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from cudf_spark.catalog import read_parquet
+from cudf_spark.catalog import normalize_events_ts, read_parquet
 
 
 def events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """``events`` as a file-source stream (the parquet-channel analogue of
     libcudf_streaming's chunked parquet source, cpp/libcudf_streaming/src/
-    parquet.cpp). Normalizes the ts column across fixture vintages (ns-as-
-    long vs native micros) like catalog.load."""
+    parquet.cpp), with ``ts`` normalized like catalog.load."""
     # the nanosAsLong conf mutates the SHARED session: every later
     # parquet read of ns-timestamp files would silently return bigint.
     # It must stay set while THIS stream runs (the scan consults it at
@@ -39,15 +38,12 @@ def events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         else:
             spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", prev)
     # the file source wants a directory; glob down to the events table
-    raw = (
+    return normalize_events_ts(
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", 1)
         .option("pathGlobFilter", "events.parquet")
         .parquet(sf_dir)
     )
-    if needs_legacy:  # nanos-as-long vintage
-        return raw.withColumn("ts", F.expr("timestamp_micros(ts div 1000)"))
-    return raw.withColumn("ts", F.col("ts").cast("timestamp"))
 
 
 def tumbling_counts(events: DataFrame, *, width: str = "1 hour", watermark: str = "2 hours") -> DataFrame:

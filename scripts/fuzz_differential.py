@@ -18,7 +18,7 @@ re-expressed for this repo's differential gate: per seed,
      1-row groups, duplicate order keys, heavy-tailed doc lengths,
      skewed group keys, null injection;
   2. run the driver's own comparator (Spark result vs DuckDB oracle,
-     column-sorted value hash — scripts/driver_sim.py:27) over a
+     column-sorted value hash — scripts/driver_sim.py vhash) over a
      seed-rotated cohort of oracle-backed registry queries;
   3. exit non-zero on any MISMATCH or error, with a per-seed JSON
      report under .fuzz/.
@@ -288,7 +288,7 @@ def gen_fixture(seed: int, outdir: str,
 
 
 def vhash(cols, rows) -> str:
-    """Byte-for-byte the driver comparator (scripts/driver_sim.py:27)."""
+    """Byte-for-byte the driver comparator (scripts/driver_sim.py vhash)."""
     cols = list(cols)
     order = sorted(range(len(cols)), key=lambda i: cols[i])
     norm = sorted([tuple(str(r[i]) for i in order) for r in rows])

@@ -3,9 +3,11 @@ name, oracle kind, source location, one-line doc. Regenerate after
 adding queries: `python scripts/query_index.py`."""
 from __future__ import annotations
 
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 HEADER = """# QUERIES — registry index
 
@@ -42,7 +44,7 @@ def main() -> None:
         *rows,
         "",
     ]
-    with open("/root/repo/QUERIES.md", "w") as fh:
+    with open(os.path.join(REPO, "QUERIES.md"), "w") as fh:
         fh.write("\n".join(out))
     print(f"wrote QUERIES.md ({len(rows)} rows)")
 

@@ -335,8 +335,7 @@ def test_avro_resolution_empty_file(spark, tmp_path):
               "fields": [{"name": "id", "type": "long"},
                          {"name": "x", "type": "long", "default": 0}]}
     write_avro([], writer, str(tmp_path / "e.avro"))
-    df = read_avro(spark, str(tmp_path), schema_file=str(tmp_path / "e.avro"),
-                   reader_schema=reader)
+    df = read_avro(spark, str(tmp_path), reader_schema=reader)
     assert df.columns == ["id", "x"] and df.count() == 0
 
 

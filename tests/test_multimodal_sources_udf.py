@@ -3,6 +3,8 @@ Arrow-batched UDF surface."""
 
 from __future__ import annotations
 
+import contextlib
+import os
 import tempfile
 
 import pandas as pd
@@ -40,24 +42,25 @@ def test_multimodal_pixel_decode_is_stubbed(spark):
 @pytest.mark.parametrize("fmt", ["parquet", "orc", "csv", "json"])
 def test_source_roundtrip(spark, fmt):
     from cudf_spark.catalog import load
-    from cudf_spark.sources import read, write
 
     df = load(spark, SF_DIR, "nation")
     with tempfile.TemporaryDirectory() as tmp:
         path = f"{tmp}/out_{fmt}"
-        write(df, path, fmt)
-        back = read(spark, path, fmt, schema=df.schema if fmt in ("csv", "json") else None)
+        df.write.format(fmt).save(path)
+        reader = spark.read.format(fmt)
+        if fmt in ("csv", "json"):
+            reader = reader.schema(df.schema)
+        back = reader.load(path)
         assert sorted(map(tuple, back.collect())) == sorted(map(tuple, df.collect()))
 
 
 def test_write_partitioned_prunes(spark):
     from cudf_spark.catalog import load
-    from cudf_spark.sources import read, write
 
     df = load(spark, SF_DIR, "nation")
     with tempfile.TemporaryDirectory() as tmp:
-        write(df, f"{tmp}/p", "parquet", partition_by=["n_regionkey"])
-        pruned = read(spark, f"{tmp}/p", "parquet").filter(F.col("n_regionkey") == 2)
+        df.write.format("parquet").partitionBy("n_regionkey").save(f"{tmp}/p")
+        pruned = spark.read.format("parquet").load(f"{tmp}/p").filter(F.col("n_regionkey") == 2)
         plan = pruned._jdf.queryExecution().executedPlan().toString()
         assert pruned.count() == df.filter(F.col("n_regionkey") == 2).count()
         # partition filter must reach the scan (pruned directories)
@@ -68,11 +71,10 @@ def test_udf_surface(spark):
     import numpy as np
 
     from cudf_spark.catalog import load
-    from cudf_spark.udf import apply_series, groupby_apply, map_batches
 
     li = load(spark, SF_DIR, "lineitem").select("l_returnflag", "l_quantity").limit(1000)
 
-    double_qty = apply_series(lambda s: s * 2, "double")
+    double_qty = F.pandas_udf(lambda s: s * 2, "double")
     got = li.select(double_qty(F.col("l_quantity")).alias("d"), "l_quantity").collect()
     assert all(abs(r["d"] - 2 * r["l_quantity"]) < 1e-9 for r in got)
 
@@ -81,7 +83,9 @@ def test_udf_surface(spark):
         pdf["centered"] = pdf["l_quantity"] - pdf["l_quantity"].mean()
         return pdf
 
-    centered = groupby_apply(li, ["l_returnflag"], center, "l_returnflag string, l_quantity double, centered double")
+    centered = li.groupBy("l_returnflag").applyInPandas(
+        center, schema="l_returnflag string, l_quantity double, centered double"
+    )
     sums = centered.groupBy("l_returnflag").agg(F.round(F.sum("centered"), 6).alias("s")).collect()
     assert all(abs(r["s"]) < 1e-6 for r in sums)
 
@@ -89,7 +93,7 @@ def test_udf_surface(spark):
         for pdf in batches:
             yield pdf.assign(logq=np.log1p(pdf["l_quantity"]))
 
-    mb = map_batches(li, add_log, "l_returnflag string, l_quantity double, logq double")
+    mb = li.mapInPandas(add_log, schema="l_returnflag string, l_quantity double, logq double")
     assert mb.filter(F.col("logq") <= 0).count() == 0
 
 
@@ -202,9 +206,9 @@ def test_audio_features_byte_exact(spark):
 
 
 def test_avro_roundtrip_pure_python_reader(spark, tmp_path):
-    """The spec-level Avro reader (binaryFile + mapInPandas decode) reads
-    back what the minimal writer produced, null and deflate codecs,
-    nullable unions included."""
+    """The spec-level Avro reader (byte-range splits + mapInPandas
+    decode) reads back what the minimal writer produced, null and deflate
+    codecs, nullable unions included."""
     from cudf_spark.sources.avro import read_avro, write_avro
 
     schema = {
@@ -228,7 +232,7 @@ def test_avro_roundtrip_pure_python_reader(spark, tmp_path):
         d.mkdir()
         write_avro(rows, schema, str(d / "part-0.avro"), codec=codec)
         got = (
-            read_avro(spark, str(d), schema_file=str(d / "part-0.avro"))
+            read_avro(spark, str(d))
             .orderBy("id")
             .collect()
         )
@@ -247,28 +251,11 @@ def test_avro_multi_file_parallel_read(spark, tmp_path):
         write_avro(
             [{"v": i * 10 + j} for j in range(5)], schema, str(tmp_path / f"p{i}.avro")
         )
-    df = read_avro(spark, str(tmp_path), schema_file=str(tmp_path / "p0.avro"))
+    df = read_avro(spark, str(tmp_path))
     assert sorted(r.v for r in df.collect()) == sorted(
         i * 10 + j for i in range(4) for j in range(5)
     )
 
-
-def test_sources_read_avro_fallback(spark, tmp_path):
-    # sources.read(fmt="avro") must fall back to the spec reader when the
-    # spark-avro jar is absent (as in this container).
-    from cudf_spark.sources import read
-    from cudf_spark.sources.avro import write_avro
-
-    schema = {
-        "type": "record",
-        "name": "r",
-        "fields": [{"name": "a", "type": "long"}, {"name": "b", "type": "string"}],
-    }
-    write_avro(
-        [{"a": 1, "b": "x"}, {"a": 2, "b": "y"}], schema, str(tmp_path / "f.avro")
-    )
-    got = read(spark, str(tmp_path), fmt="avro").orderBy("a").collect()
-    assert [(r.a, r.b) for r in got] == [(1, "x"), (2, "y")]
 
 def test_avro_nested_record_array_map(spark, tmp_path):
     """Nested record → struct, array<primitive> → array, map → map, all
@@ -325,7 +312,7 @@ def test_avro_nested_record_array_map(spark, tmp_path):
         d = tmp_path / codec
         d.mkdir()
         write_avro(rows, schema, str(d / "part-0.avro"), codec=codec)
-        df = read_avro(spark, str(d), schema_file=str(d / "part-0.avro"))
+        df = read_avro(spark, str(d))
         assert df.schema["meta"].dataType.typeName() == "struct"
         assert df.schema["tags"].dataType.typeName() == "array"
         assert df.schema["attrs"].dataType.typeName() == "map"
@@ -359,7 +346,7 @@ def test_avro_union_declared_order(spark, tmp_path):
     ]
     write_avro(rows, schema, str(tmp_path / "p0.avro"))
     got = (
-        read_avro(spark, str(tmp_path), schema_file=str(tmp_path / "p0.avro"))
+        read_avro(spark, str(tmp_path))
         .orderBy("id")
         .collect()
     )
@@ -371,13 +358,12 @@ def test_avro_union_declared_order(spark, tmp_path):
     ]
 
 
-def test_sources_avro_fallback_narrow_except(spark, tmp_path):
-    # A corrupt file must surface an error, not be silently retried into
-    # nonsense; and an explicit schema passes through to the fallback.
+def test_avro_explicit_schema_and_corrupt_file(spark, tmp_path):
+    # An explicit schema passes through; a corrupt file must surface an
+    # error, not decode into nonsense.
     import pytest as _pytest
 
-    from cudf_spark.sources import read
-    from cudf_spark.sources.avro import write_avro
+    from cudf_spark.sources.avro import read_avro, write_avro
 
     schema = {
         "type": "record",
@@ -385,14 +371,14 @@ def test_sources_avro_fallback_narrow_except(spark, tmp_path):
         "fields": [{"name": "a", "type": "long"}],
     }
     write_avro([{"a": 5}], schema, str(tmp_path / "f.avro"))
-    got = read(spark, str(tmp_path), fmt="avro", schema="`a` long").collect()
+    got = read_avro(spark, str(tmp_path), schema="`a` long").collect()
     assert [r.a for r in got] == [5]
 
     bad = tmp_path / "bad"
     bad.mkdir()
     (bad / "f.avro").write_bytes(b"Obj\x01garbage-not-a-real-header")
     with _pytest.raises(Exception):
-        read(spark, str(bad), fmt="avro").collect()
+        read_avro(spark, str(bad)).collect()
 
 
 def test_avro_distributed_write_roundtrip(spark, tmp_path):
@@ -420,8 +406,7 @@ def test_avro_distributed_write_roundtrip(spark, tmp_path):
     parts = write_avro_dataframe(df, str(tmp_path / "out"), codec="deflate")
     assert 1 <= len(parts) <= 3 and sum(n for _, n in parts) == 20
 
-    first = sorted(p for p, _ in parts)[0]
-    back = read_avro(spark, str(tmp_path / "out"), schema_file=first)
+    back = read_avro(spark, str(tmp_path / "out"))
     got = {r.id: r for r in back.collect()}
     assert len(got) == 20
     for i in range(20):
@@ -438,8 +423,6 @@ def test_map_arrow_zero_pandas_roundtrip(spark):
     import pyarrow as pa
     import pyarrow.compute as pc
 
-    from cudf_spark.udf import map_arrow
-
     df = spark.range(0, 1000, numPartitions=4).withColumnRenamed("id", "x")
 
     def double_plus_one(batches):
@@ -448,7 +431,7 @@ def test_map_arrow_zero_pandas_roundtrip(spark):
             y = pc.add(pc.multiply(b.column("x"), 2), 1)
             yield pa.RecordBatch.from_arrays([b.column("x"), y], names=["x", "y"])
 
-    out = map_arrow(df, double_plus_one, "x long, y long")
+    out = df.mapInArrow(double_plus_one, schema="x long, y long")
     rows = {r["x"]: r["y"] for r in out.collect()}
     assert len(rows) == 1000
     assert all(rows[x] == 2 * x + 1 for x in rows)
@@ -476,7 +459,7 @@ def test_avro_multi_branch_union_roundtrip(spark, tmp_path):
         {"id": 3, "v": None, "w": 0.25},
     ]
     write_avro(rows, schema, str(tmp_path / "u.avro"))
-    df = read_avro(spark, str(tmp_path), schema_file=str(tmp_path / "u.avro"))
+    df = read_avro(spark, str(tmp_path))
     assert df.schema["v"].dataType.simpleString() == "struct<member0:bigint,member1:string>"
     assert df.schema["w"].dataType.simpleString() == "struct<member0:double,member1:string>"
     got = {r.id: r for r in df.collect()}
@@ -487,12 +470,27 @@ def test_avro_multi_branch_union_roundtrip(spark, tmp_path):
     assert got[3].w.member0 == 0.25
 
 
+@contextlib.contextmanager
+def _max_partition_bytes(spark, n: int):
+    """Set the session's file split size, restoring it afterwards."""
+    key = "spark.sql.files.maxPartitionBytes"
+    prev = spark.conf.get(key, None)
+    spark.conf.set(key, str(n))
+    try:
+        yield
+    finally:
+        if prev is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, prev)
+
+
 def test_avro_split_read_multi_block(spark, tmp_path):
     """Within-file block parallelism: a multi-block file read through
     byte-range splits (Hadoop AvroInputFormat protocol) yields every row
     exactly once, for any split size — including splits that start
     mid-block and splits containing no block start at all."""
-    from cudf_spark.sources.avro import read_avro, read_avro_split, write_avro
+    from cudf_spark.sources.avro import read_avro, write_avro
 
     schema = {
         "type": "record",
@@ -506,24 +504,33 @@ def test_avro_split_read_multi_block(spark, tmp_path):
     f = str(tmp_path / "big.avro")
     write_avro(rows, schema, f, rows_per_block=7)
 
-    whole = sorted((r.k, r.s) for r in read_avro(spark, f"{tmp_path}", schema_file=f).collect())
+    whole = sorted((r.k, r.s) for r in read_avro(spark, f"{tmp_path}").collect())
     assert len(whole) == 500
-    import os
-
     size = os.path.getsize(f)
-    for split_bytes in (size + 1, size // 3, 256, 64):
-        got = sorted(
-            (r.k, r.s)
-            for r in read_avro_split(
-                spark, f, schema_file=f, split_bytes=split_bytes
-            ).collect()
-        )
-        assert got == whole, f"split_bytes={split_bytes}"
+    for split in (size + 1, size // 3, 256, 64):
+        with _max_partition_bytes(spark, split):
+            got = sorted((r.k, r.s) for r in read_avro(spark, f).collect())
+        assert got == whole, f"maxPartitionBytes={split}"
+
+
+def test_avro_read_splits_one_file_across_tasks(spark, tmp_path):
+    """read_avro splits by the session's maxPartitionBytes: at 256 B a
+    multi-block file decodes in more than one partition, and every row
+    comes back exactly once."""
+    from cudf_spark.sources.avro import read_avro, write_avro
+
+    schema = {"type": "record", "name": "r", "fields": [{"name": "k", "type": "long"}]}
+    f = str(tmp_path / "big.avro")
+    write_avro([{"k": i} for i in range(300)], schema, f, rows_per_block=10)
+    with _max_partition_bytes(spark, 256):
+        got = read_avro(spark, f).select("k", F.spark_partition_id().alias("pid")).collect()
+    assert len({r.pid for r in got}) > 1
+    assert sorted(r.k for r in got) == list(range(300))
 
 
 def test_avro_split_read_deflate_directory(spark, tmp_path):
     """Split reads compose with compressed blocks and directory input."""
-    from cudf_spark.sources.avro import read_avro_split, write_avro
+    from cudf_spark.sources.avro import read_avro, write_avro
 
     schema = {"type": "record", "name": "r", "fields": [{"name": "k", "type": "long"}]}
     for p in range(3):
@@ -534,10 +541,8 @@ def test_avro_split_read_deflate_directory(spark, tmp_path):
             codec="deflate",
             rows_per_block=9,
         )
-    df = read_avro_split(
-        spark, str(tmp_path), schema_file=str(tmp_path / "p0.avro"), split_bytes=128
-    )
-    got = sorted(r.k for r in df.collect())
+    with _max_partition_bytes(spark, 128):
+        got = sorted(r.k for r in read_avro(spark, str(tmp_path)).collect())
     assert got == sorted(p * 100 + i for p in range(3) for i in range(40))
 
 
@@ -546,7 +551,7 @@ def test_avro_split_read_sync_bytes_in_data(spark, tmp_path):
     sequence must not be mistaken for a block boundary by the range
     scanner (the writer now uses a RANDOM per-file sync, so an embedded
     ASCII marker is just data)."""
-    from cudf_spark.sources.avro import read_avro, read_avro_split, write_avro
+    from cudf_spark.sources.avro import read_avro, write_avro
 
     schema = {
         "type": "record",
@@ -562,14 +567,12 @@ def test_avro_split_read_sync_bytes_in_data(spark, tmp_path):
     ]
     f = str(tmp_path / "tricky.avro")
     write_avro(rows, schema, f, rows_per_block=7)
-    whole = sorted((r.k, r.s) for r in read_avro(spark, str(tmp_path), schema_file=f).collect())
+    whole = sorted((r.k, r.s) for r in read_avro(spark, str(tmp_path)).collect())
     assert len(whole) == 120
-    for split_bytes in (97, 256):
-        got = sorted(
-            (r.k, r.s)
-            for r in read_avro_split(spark, f, schema_file=f, split_bytes=split_bytes).collect()
-        )
-        assert got == whole, f"split_bytes={split_bytes}"
+    for split in (97, 256):
+        with _max_partition_bytes(spark, split):
+            got = sorted((r.k, r.s) for r in read_avro(spark, f).collect())
+        assert got == whole, f"maxPartitionBytes={split}"
 
 
 def test_avro_union_numeric_promotion(spark, tmp_path):
@@ -586,9 +589,7 @@ def test_avro_union_numeric_promotion(spark, tmp_path):
         "fields": [{"name": "w", "type": ["double", "string"]}],
     }
     write_avro([{"w": 5}, {"w": "txt"}], schema, str(tmp_path / "p.avro"))
-    got = read_avro(
-        spark, str(tmp_path), schema_file=str(tmp_path / "p.avro")
-    ).collect()
+    got = read_avro(spark, str(tmp_path)).collect()
     vals = sorted(
         ((r.w.member0, r.w.member1) for r in got),
         key=lambda t: (t[0] is None, t),
@@ -634,7 +635,7 @@ def test_avro_enum_fixed_named_reference(spark, tmp_path):
          "digest2": b"wxyz"},
     ]
     write_avro(rows, schema, str(tmp_path / "p0.avro"))
-    df = read_avro(spark, str(tmp_path), schema_file=str(tmp_path / "p0.avro"))
+    df = read_avro(spark, str(tmp_path))
     assert dict(df.dtypes) == {
         "color": "string", "color2": "string",
         "digest": "binary", "digest2": "binary",
@@ -692,7 +693,7 @@ def test_avro_logical_types_roundtrip(spark, tmp_path):
          "u": "0002-bbbb"},
     ]
     write_avro(rows, schema, str(tmp_path / "p0.avro"))
-    df = read_avro(spark, str(tmp_path), schema_file=str(tmp_path / "p0.avro"))
+    df = read_avro(spark, str(tmp_path))
     assert dict(df.dtypes) == {
         "id": "bigint", "d": "date", "ts_us": "timestamp",
         "ts_ms": "timestamp", "amount": "decimal(10,2)",
@@ -719,10 +720,7 @@ def test_avro_write_dataframe_logical_types(spark, tmp_path):
     ).repartition(2)
     out = tmp_path / "logical"
     write_avro_dataframe(df, str(out))
-    import glob
-
-    part = sorted(glob.glob(str(out / "*.avro")))[0]
-    got = read_avro(spark, str(out), schema_file=part)
+    got = read_avro(spark, str(out))
     assert dict(got.dtypes) == {
         "id": "bigint", "d": "date", "ts": "timestamp", "amt": "decimal(9,2)",
     }
@@ -799,7 +797,6 @@ def test_avro_schema_resolution_across_versions(spark, tmp_path):
     )
     df = read_avro(
         spark, str(tmp_path),
-        schema_file=str(tmp_path / "v2.avro"),
         reader_schema=reader,
     )
     assert dict(df.dtypes) == {
@@ -862,7 +859,6 @@ def test_avro_schema_resolution_nested_and_enum(spark, tmp_path):
     )
     df = read_avro(
         spark, str(tmp_path),
-        schema_file=str(tmp_path / "p.avro"),
         reader_schema=reader,
     )
     got = sorted((r.asDict(recursive=True) for r in df.collect()),
@@ -878,22 +874,23 @@ def test_avro_schema_resolution_missing_default_errors(spark, tmp_path):
     """A reader-only field with no default must fail loudly, per spec."""
     import pytest
 
-    from cudf_spark.sources.avro import _decode_file, write_avro
+    from cudf_spark.sources.avro import _decode_file_range, write_avro
 
     writer = {"type": "record", "name": "evt",
               "fields": [{"name": "id", "type": "long"}]}
     reader = {"type": "record", "name": "evt",
               "fields": [{"name": "id", "type": "long"},
                          {"name": "must", "type": "string"}]}
-    write_avro([{"id": 1}], writer, str(tmp_path / "p.avro"))
+    path = tmp_path / "p.avro"
+    write_avro([{"id": 1}], writer, str(path))
     with pytest.raises(ValueError, match="declares no default"):
-        _decode_file((tmp_path / "p.avro").read_bytes(), reader)
+        _decode_file_range(str(path), 0, path.stat().st_size, reader)
 
 
 def test_avro_split_read_with_reader_schema(spark, tmp_path):
     """The block-parallel split reader applies the same resolution rules
     per range, so evolution composes with within-file parallelism."""
-    from cudf_spark.sources.avro import read_avro_split, write_avro
+    from cudf_spark.sources.avro import read_avro, write_avro
 
     writer = {"type": "record", "name": "evt",
               "fields": [{"name": "id", "type": "int"},
@@ -906,12 +903,9 @@ def test_avro_split_read_with_reader_schema(spark, tmp_path):
         [{"id": i, "junk": "x" * 50} for i in range(200)],
         writer, str(tmp_path / "big.avro"), rows_per_block=20,
     )
-    df = read_avro_split(
-        spark, str(tmp_path / "big.avro"),
-        schema_file=str(tmp_path / "big.avro"),
-        split_bytes=2048, reader_schema=reader,
-    )
-    got = sorted((r.id, r.lbl) for r in df.collect())
+    with _max_partition_bytes(spark, 2048):
+        df = read_avro(spark, str(tmp_path / "big.avro"), reader_schema=reader)
+        got = sorted((r.id, r.lbl) for r in df.collect())
     assert got == [(i, "none") for i in range(200)]
     assert dict(df.dtypes) == {"id": "bigint", "lbl": "string"}
 
@@ -963,26 +957,6 @@ def test_wav_decode_real_format(spark):
     assert r1.rms == math.sqrt(sum(s * s for s in samples) / 5)
     assert r1.duration_ms == 5 * 1000 // 8000
     assert got[2].valid is False and got[3].valid is False
-
-
-def test_sources_read_avro_avroschema_option(spark, tmp_path):
-    """The uniform read() API honors spark-avro's `avroSchema` option in
-    the jar-absent fallback: the JSON reader schema drives spec
-    resolution, so evolution works through one API either way."""
-    import json
-
-    from cudf_spark.sources import read
-    from cudf_spark.sources.avro import write_avro
-
-    writer = {"type": "record", "name": "evt",
-              "fields": [{"name": "id", "type": "int"}]}
-    reader = {"type": "record", "name": "evt",
-              "fields": [{"name": "id", "type": "long"},
-                         {"name": "v", "type": "long", "default": 7}]}
-    write_avro([{"id": 1}, {"id": 2}], writer, str(tmp_path / "p.avro"))
-    df = read(spark, str(tmp_path), "avro", avroSchema=json.dumps(reader))
-    assert dict(df.dtypes) == {"id": "bigint", "v": "bigint"}
-    assert sorted((r.id, r.v) for r in df.collect()) == [(1, 7), (2, 7)]
 
 
 def test_avro_review_fixes_round6():
@@ -1083,7 +1057,7 @@ def test_avro_schema_and_reader_schema_mutually_exclusive(spark, tmp_path):
     write_avro([{"id": 1}], writer, str(tmp_path / "p.avro"))
     with pytest.raises(ValueError, match="mutually exclusive"):
         read_avro(
-            spark, str(tmp_path), schema_file=str(tmp_path / "p.avro"),
+            spark, str(tmp_path),
             schema="id long", reader_schema=writer,
         )
 
@@ -1138,31 +1112,6 @@ def test_avro_review_fixes_round6b():
     assert qf["fields"][0]["type"] == "Late" and namedf["Late"]["size"] == 2
 
 
-def test_sources_read_avro_schema_plus_avroschema(spark, tmp_path):
-    """read() with BOTH a Spark schema and the avroSchema option must
-    stay a drop-in for the jar path: avroSchema drives resolution, the
-    explicit Spark schema shapes the OUTPUT (as .schema() does with
-    spark-avro present)."""
-    import json
-
-    from cudf_spark.sources import read
-    from cudf_spark.sources.avro import write_avro
-
-    writer = {"type": "record", "name": "evt",
-              "fields": [{"name": "id", "type": "int"}]}
-    reader = {"type": "record", "name": "evt",
-              "fields": [{"name": "id", "type": "long"},
-                         {"name": "v", "type": "long", "default": 3}]}
-    write_avro([{"id": 9}], writer, str(tmp_path / "p.avro"))
-    df = read(spark, str(tmp_path), "avro", schema="id long",
-              avroSchema=json.dumps(reader))
-    assert df.columns == ["id"]  # explicit schema shapes the output
-    assert [r.id for r in df.collect()] == [9]
-    # without the explicit schema, the reader schema's columns come back
-    df2 = read(spark, str(tmp_path), "avro", avroSchema=json.dumps(reader))
-    assert sorted((r.id, r.v) for r in df2.collect()) == [(9, 3)]
-
-
 def test_avro_writer_nan_and_block_guards(tmp_path):
     """Round-8 review: (a) NaN with NO null branch must encode as the
     IEEE double (it raised 'null value for union' pre-fix); (b) NaN
@@ -1173,7 +1122,7 @@ def test_avro_writer_nan_and_block_guards(tmp_path):
 
     import pytest
 
-    from cudf_spark.sources.avro import _decode_file, write_avro
+    from cudf_spark.sources.avro import _decode_file_range, write_avro
 
     schema = {
         "type": "record",
@@ -1185,8 +1134,7 @@ def test_avro_writer_nan_and_block_guards(tmp_path):
     }
     path = str(tmp_path / "nan.avro")
     write_avro([{"x": float("nan"), "y": float("nan")}], schema, path)
-    with open(path, "rb") as fh:
-        rows, names = _decode_file(fh.read())
+    rows, names = _decode_file_range(path, 0, os.path.getsize(path))
     assert names == ["x", "y"]
     [(x, y)] = rows
     # multi-branch union reads back as the struct-of-nullables memberN

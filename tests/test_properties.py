@@ -640,10 +640,12 @@ _AVRO_FIELD_TYPES = [
 @settings(max_examples=25, deadline=None)
 @given(data=st.data())
 def test_avro_roundtrip_property(data, tmp_path_factory):
-    """write_avro -> _decode_file is the identity for arbitrary values of
+    """write_avro -> _decode_file_range is the identity for arbitrary values of
     every supported shape (primitives, nullable union, array, map, enum,
     fixed), arbitrary field subsets, multi-block files, both codecs."""
-    from cudf_spark.sources.avro import _decode_file, write_avro
+    import os
+
+    from cudf_spark.sources.avro import _decode_file_range, write_avro
 
     picked = data.draw(
         st.lists(st.sampled_from(range(len(_AVRO_FIELD_TYPES))),
@@ -663,8 +665,7 @@ def test_avro_roundtrip_property(data, tmp_path_factory):
     rows_per_block = data.draw(st.sampled_from([None, 3]))
     path = str(tmp_path_factory.mktemp("avro") / "p.avro")
     write_avro(rows, schema, path, codec=codec, rows_per_block=rows_per_block)
-    with open(path, "rb") as fh:
-        got_rows, names = _decode_file(fh.read())
+    got_rows, names = _decode_file_range(path, 0, os.path.getsize(path))
     assert names == [n for n, _, _ in fields]
     assert len(got_rows) == n_rows
     for want, got in zip(rows, got_rows):
