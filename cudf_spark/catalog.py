@@ -63,6 +63,26 @@ def read_parquet(spark: SparkSession, path: str) -> DataFrame:
     return df
 
 
+def read_events(spark: SparkSession, path: str) -> DataFrame:
+    """:func:`read_parquet` of an ``events`` file with ``nanosAsLong`` set
+    for as long as the file needs it.
+
+    Spark's vectorized reader rejects TIMESTAMP(NANOS) unless the conf is
+    set, and the scan consults it when it runs (a stream at every
+    micro-batch), so for a nanos vintage it stays set on the shared session.
+    A micros vintage never needs it: the caller's value is restored.
+    """
+    prev = spark.conf.get(NANOS_AS_LONG, None)
+    spark.conf.set(NANOS_AS_LONG, "true")
+    df = read_parquet(spark, path)
+    if dict(df.dtypes).get("ts") != "bigint":
+        if prev is None:
+            spark.conf.unset(NANOS_AS_LONG)
+        else:
+            spark.conf.set(NANOS_AS_LONG, prev)
+    return df
+
+
 def normalize_events_ts(events: DataFrame) -> DataFrame:
     """Microsecond session-tz ``ts`` for either ``events`` fixture vintage.
 
@@ -91,12 +111,5 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     # built itself, so pin the tz here rather than in our session builder.
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     if name == "events":
-        spark.conf.set(NANOS_AS_LONG, "true")
-        return normalize_events_ts(read_parquet(spark, f"{sf_dir}/{name}.parquet"))
+        return normalize_events_ts(read_events(spark, f"{sf_dir}/{name}.parquet"))
     return read_parquet(spark, f"{sf_dir}/{name}.parquet")
-
-
-def register_views(spark: SparkSession, sf_dir: str) -> None:
-    """Register every fixture table as a temp view (for SQL-form queries)."""
-    for t in TABLES:
-        load(spark, sf_dir, t).createOrReplaceTempView(t)

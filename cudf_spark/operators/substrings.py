@@ -59,9 +59,7 @@ def duplicate_spans(
     text_col: str,
     *,
     min_length: int = 20,
-    exact: bool = False,
     max_gram_freq: int | None = None,
-    skew_safe: bool = False,
 ) -> DataFrame:
     """Maximal duplicated spans ≥ min_length chars.
 
@@ -70,55 +68,35 @@ def duplicate_spans(
     (cross-document or repeated within a document — the reference's
     ``resolve_duplicates`` self-duplicate semantics).
 
-    By default the dup check keys on ``xxhash64(gram)`` — the shuffle moves
-    8 bytes instead of k chars and sorts longs instead of strings (measured
-    2.8× end-to-end at sf0.1). A hash collision would report a false
-    duplicate span: expected collisions ≈ n²/2⁶⁵ (≈ 3·10⁻⁸ at 10⁶ grams;
-    still ≪ the k-gram approximation's own false-positive envelope at
-    corpus scale). Pass ``exact=True`` to shuffle the gram strings.
+    The dup check keys on ``xxhash64(gram)`` — the shuffle moves 8 bytes
+    instead of k chars and sorts longs instead of strings (measured 2.8×
+    end-to-end at sf0.1). A hash collision would report a false duplicate
+    span: expected collisions ≈ n²/2⁶⁵ (≈ 3·10⁻⁸ at 10⁶ grams; still ≪ the
+    k-gram approximation's own false-positive envelope at corpus scale).
 
     ``max_gram_freq`` caps boilerplate: grams occurring more often are
     treated as templating noise and dropped from anchoring (exact-document
     dedup still covers the pages built from them). This bounds the island
     windows and the span output under pathological corpora.
 
-    Two physical shapes for the dup-gram pass:
-
-    * default (``skew_safe=False``): one windowed ``count`` over the gram
-      key — a single shuffle of the gram index, and WindowExec buffers one
-      gram group at a time (spilling to disk past the buffer threshold), so
-      a mega-frequent gram degrades to one slow spilling task, never an
-      OOM. Fastest shape for normal corpora (the groupBy formulation
-      measured 2.4× slower at sf0.1 — the explode subtree evaluates twice).
-    * ``skew_safe=True``: groupBy(gram).count() (map-side partial
-      aggregation — skew-immune by construction) semi-joined back to the
-      gram index. The hot gram never concentrates raw rows in one task's
-      buffer: it is filtered OUT of the build side by the cap, and AQE's
-      skew-join splitting handles the probe. Pays a second evaluation of
-      the gram explode; the right shape when boilerplate is expected.
+    The gram count is one windowed ``count`` over the gram key — a single
+    shuffle of the gram index, and WindowExec buffers one gram group at a
+    time (spilling to disk past the buffer threshold), so a mega-frequent
+    gram degrades to one slow spilling task, never an OOM. (A groupBy count
+    semi-joined back measured 2.4× slower at sf0.1: the gram explode
+    evaluates twice.)
     """
     grams = kgram_index(docs, id_col, text_col, min_length)
-    gkey = F.col("gram") if exact else F.xxhash64("gram")
-    cap = F.lit(max_gram_freq) if max_gram_freq is not None else None
-    if skew_safe:
-        keyed = grams.withColumn("gkey", gkey)
-        freq = keyed.groupBy("gkey").agg(F.count(F.lit(1)).alias("cnt"))
-        dup_keys = freq.filter(
-            (F.col("cnt") > 1) & ((F.col("cnt") <= cap) if cap is not None else F.lit(True))
-        )
-        anchors = keyed.join(dup_keys.select("gkey"), "gkey", "left_semi").select(
-            id_col, "pos"
-        )
-    else:
-        wg = Window.partitionBy("gkey")
-        cnt = F.count(F.lit(1)).over(wg)
-        dup = (cnt > 1) & ((cnt <= cap) if cap is not None else F.lit(True))
-        anchors = (
-            grams.withColumn("gkey", gkey)
-            .withColumn("__dup", dup)
-            .filter(F.col("__dup"))
-            .select(id_col, "pos")
-        )
+    cnt = F.count(F.lit(1)).over(Window.partitionBy("gkey"))
+    dup = cnt > 1
+    if max_gram_freq is not None:
+        dup = dup & (cnt <= max_gram_freq)
+    anchors = (
+        grams.withColumn("gkey", F.xxhash64("gram"))
+        .withColumn("__dup", dup)
+        .filter(F.col("__dup"))
+        .select(id_col, "pos")
+    )
     w = Window.partitionBy(id_col).orderBy("pos")
     islands = anchors.withColumn("island", F.col("pos") - F.row_number().over(w))
     return (
@@ -137,7 +115,6 @@ def resolve_duplicate_spans(
     text_col: str,
     *,
     min_length: int = 20,
-    exact: bool = False,
     max_gram_freq: int | None = 64,
 ) -> DataFrame:
     """EXACT maximal duplicated spans ≥ min_length chars — the reference's
@@ -163,23 +140,23 @@ def resolve_duplicate_spans(
     boilerplate grams exactly as ``duplicate_spans`` does. Candidate
     volume is Σ freq² over surviving grams: proportional to true
     duplication, never all-pairs over the corpus.
+
+    Grams join on the gram string itself, not a hash of it: a hash
+    collision would pair unequal grams and break the exactness above.
     """
     grams = kgram_index(docs, id_col, text_col, min_length)
-    gkey = F.col("gram") if exact else F.xxhash64("gram")
-    g = grams.select(
-        F.col(id_col).alias("d"), F.col("pos").alias("p"), gkey.alias("gkey")
-    )
+    g = grams.select(F.col(id_col).alias("d"), F.col("pos").alias("p"), "gram")
     if max_gram_freq is not None:
-        wg = Window.partitionBy("gkey")
+        wg = Window.partitionBy("gram")
         g = (
             g.withColumn("__n", F.count(F.lit(1)).over(wg))
             .filter(F.col("__n") <= max_gram_freq)
             .drop("__n")
         )
-    a = g.select(F.col("d").alias("d1"), F.col("p").alias("p1"), "gkey")
-    b = g.select(F.col("d").alias("d2"), F.col("p").alias("p2"), "gkey")
+    a = g.select(F.col("d").alias("d1"), F.col("p").alias("p1"), "gram")
+    b = g.select(F.col("d").alias("d2"), F.col("p").alias("p2"), "gram")
     pairs = (
-        a.join(b, "gkey")
+        a.join(b, "gram")
         .filter((F.col("d1") != F.col("d2")) | (F.col("p1") != F.col("p2")))
         .select("d1", "p1", "d2", (F.col("p2") - F.col("p1")).alias("off"))
     )

@@ -78,13 +78,6 @@ def wordpiece_tokenize_udf(spark: SparkSession, vocab: list[str], unk: str = "[U
     return tok
 
 
-def wordpiece_tokenize(
-    df: DataFrame, spark: SparkSession, text_col: str, vocab: list[str], out_col: str = "pieces"
-) -> DataFrame:
-    tok = wordpiece_tokenize_udf(spark, vocab)
-    return df.withColumn(out_col, tok(F.col(text_col)))
-
-
 def bpe_tokenize_udf(spark: SparkSession, merges: list[tuple[str, str]]):
     """Returns a pandas_udf: text -> array<string> of byte-pair-encoded tokens.
 
@@ -143,17 +136,6 @@ def bpe_tokenize_udf(spark: SparkSession, merges: list[tuple[str, str]]):
         return pd.Series([tok_text(t) for t in texts])
 
     return tok
-
-
-def bpe_tokenize(
-    df: DataFrame,
-    spark: SparkSession,
-    text_col: str,
-    merges: list[tuple[str, str]],
-    out_col: str = "bpe_tokens",
-) -> DataFrame:
-    tok = bpe_tokenize_udf(spark, merges)
-    return df.withColumn(out_col, tok(F.col(text_col)))
 
 
 def unigram_tokenize_udf(spark: SparkSession, vocab: dict[str, int], unk_cost: int = 100):

@@ -73,6 +73,13 @@ def ewma(
     return df.groupBy(*key_cols).applyInPandas(per_group, schema=out_schema)
 
 
+def _check_alpha(alpha: float) -> None:
+    """pandas ``ewm``'s domain check, with its message (NaN is rejected
+    too; pandas lets it through)."""
+    if not 0.0 < alpha <= 1.0:
+        raise ValueError("alpha must satisfy: 0 < alpha <= 1")
+
+
 def ewma_grouped_scan(
     df: DataFrame,
     key_cols: list[str],
@@ -102,12 +109,13 @@ def ewma_grouped_scan(
 
     Falls back to the exact Arrow grouped map when beta is so close to 1
     that exact truncation would need > 32 lag terms, same as the
-    segmented operator.
+    segmented operator. alpha outside (0, 1] raises pandas' ``ValueError``.
     """
     import math
 
+    _check_alpha(alpha)
     beta = 1.0 - alpha
-    if beta <= 0.0:  # alpha >= 1: no memory
+    if beta == 0.0:  # alpha == 1: no memory, ewma == x
         return df.withColumn(out_col, F.col(value_col).cast("double"))
     L = max(2, min(65536, int(200.0 / max(1e-12, -math.log10(beta)))))
     q = beta**L
@@ -115,7 +123,7 @@ def ewma_grouped_scan(
     while qk != 0.0 and lags <= 32:
         lags += 1
         qk *= q
-    if beta >= 1.0 or lags > 32:
+    if lags > 32:
         return ewma(
             df, key_cols, order_cols, value_col,
             alpha=alpha, adjust=adjust, out_col=out_col,
@@ -244,9 +252,6 @@ def _ewma_num_scan(x, beta: float, carry: float):
     out = np.empty(n, dtype="float64")
     if n == 0:
         return out, carry
-    if beta == 0.0:  # alpha == 1: no memory
-        out[:] = x
-        return out, float(x[-1])
     # beta^-i must stay finite alongside |x|: budget ~10^200 of headroom.
     chunk = max(1, min(4096, int(200 / max(1e-12, -math.log10(beta)))))
     for s in range(0, n, chunk):
@@ -258,6 +263,13 @@ def _ewma_num_scan(x, beta: float, carry: float):
     return out, carry
 
 
+# Equi-width buckets of ewma_segmented. A fixed count keeps the bucketing a
+# function of the data alone: a count derived from the cluster (e.g. floored
+# at defaultParallelism) would change the result's low bits with the core
+# count.
+_EWMA_BUCKETS = 32
+
+
 def ewma_segmented(
     df: DataFrame,
     order_cols: list[str],
@@ -266,53 +278,25 @@ def ewma_segmented(
     alpha: float,
     adjust: bool = True,
     out_col: str = "ewma",
-    num_partitions: int | None = None,
-    splitters: str = "quantile",
 ) -> DataFrame:
     """GLOBAL (ungrouped / giant-group) EWMA — the segmented-scan scale
     path the grouped ``ewma`` above cannot cover: no single executor ever
     holds the sequence. pandas ``ewm(alpha=alpha, adjust=adjust).mean()``
-    semantics for non-null doubles, both adjust modes.
+    semantics for non-null doubles, both adjust modes; alpha outside
+    (0, 1] raises pandas' ``ValueError``.
 
-    ``splitters`` picks the bucket-boundary strategy (ADVICE r09: the
-    result's last-ULP bits depend on the bucketing, and ``round(, 4)``
-    downstream can flip on a .5e-4 knife edge across cluster layouts):
+    Rows split into ``_EWMA_BUCKETS`` equi-width buckets on the global
+    min/max of the first order key: two deterministic scalars, so the
+    bucketing (hence every output BIT) is identical on any cluster layout.
+    A heavily skewed order key concentrates rows in few buckets (the
+    within-bucket window partition grows).
 
-    * ``"quantile"`` (default) — ``percentile_approx`` sketch: balanced
-      buckets on any key distribution, but the sketch's partition-merge
-      order varies with layout, so bits are only layout-stable together
-      with a pinned ``num_partitions`` AND a stable input partitioning.
-    * ``"width"`` — exact equi-width on the global min/max of the order
-      key: two deterministic scalars, so with ``num_partitions`` pinned
-      the bucketing (hence every output BIT) is identical on any cluster
-      layout. Trade-off: a heavily skewed order key concentrates rows in
-      few buckets (the within-bucket window partition grows); use
-      quantile for skewed keys where bit-stability across layouts is not
-      required.
+    Pure-JVM three-level scan (no Python workers: whole-stage-codegen end
+    to end, the same block-composed cumsum the DuckDB oracle uses):
 
-    ``num_partitions`` sizing (ADVICE r10): a pinned small value (the
-    registry query pins 32) is a FIXTURE-SCALE determinism device — at
-    100 TB a 32-bucket split makes each bucket one window partition
-    holding ~1/32 of the table, defeating the operator's "no single
-    executor holds the sequence" scale story. The scale path is
-    ``num_partitions=None``: nbuckets is then derived deterministically
-    from the data volume itself (``ceil(count / 8M)`` rows per bucket,
-    floored at the cluster's default parallelism), so the per-bucket
-    window partition stays bounded at any input size while the bucketing
-    remains a pure function of the data. The one extra job is a map-side
-    count. In quantile mode the derived value is capped at 1024 (the
-    percentile sketch and the cut expression both grow with it); width
-    mode switches to a closed-form arithmetic bucket above 64 cuts, so
-    it scales to any derived nbuckets.
-
-    Pure-JVM three-level scan (no Python workers — VERDICT r08 item 3:
-    the former two-pass mapInPandas shape spent ~90% of its wall-clock
-    spinning up 32 Arrow workers twice; this shape is whole-stage-codegen
-    end to end, the same block-composed cumsum the DuckDB oracle uses):
-
-    1. ``percentile_approx`` splitters bucket rows order-contiguously
-       (``cumsum_two_level`` idiom — splitters only steer partitioning,
-       any values give identical results);
+    1. equi-width cuts bucket rows order-contiguously (``cumsum_two_level``
+       idiom — the cuts only steer partitioning, any values give identical
+       results);
     2. within each bucket, rows split into fixed ``L``-row blocks with
        ``L`` chosen so ``beta**-(L-1)`` stays far inside double range;
        a keyed ROWS window computes the within-block scaled cumsum
@@ -323,9 +307,8 @@ def ewma_segmented(
        ``q = beta**L``. The truncation depth is EXACT, not approximate —
        lags stop where ``q^(k-1)`` underflows to 0.0 in IEEE double, i.e.
        exactly where the sequential recurrence's own terms vanish;
-    4. per-bucket summaries (one row per bucket, bounded by
-       ``num_partitions``) collect to the driver and compose exactly —
-       the same bounded-collect idiom the Arrow path used per partition.
+    4. per-bucket summaries (one row per bucket) collect to the driver and
+       compose exactly.
 
     The adjust=False first-element y_0 = x_0 convention is injected via
     bucket 0's carry; the adjust=True denominator is the closed-form
@@ -338,21 +321,10 @@ def ewma_segmented(
     """
     import math
 
-    if splitters not in ("quantile", "width"):
-        # A typo ("widht") would otherwise silently select the quantile
-        # path and reintroduce the layout-dependent bucketing the flag
-        # exists to remove (ADVICE r10).
-        raise ValueError(
-            f"splitters must be 'quantile' or 'width', got {splitters!r}"
-        )
+    _check_alpha(alpha)
     beta = 1.0 - alpha
-    if beta <= 0.0:  # alpha >= 1: no memory, ewma == x
+    if beta == 0.0:  # alpha == 1: no memory, ewma == x
         return df.withColumn(out_col, F.col(value_col).cast("double"))
-    if beta >= 1.0:  # alpha <= 0 — degenerate; exact sequential path
-        return _ewma_segmented_arrow(
-            df, order_cols, value_col, alpha=alpha, adjust=adjust,
-            out_col=out_col, num_partitions=num_partitions,
-        )
     # Block length: beta^-(L-1) <= ~1e200 so the scaled cumsum never
     # overflows next to |x| (same headroom budget as _ewma_num_scan);
     # capped so one block is always a bounded window partition.
@@ -365,65 +337,26 @@ def ewma_segmented(
     if lags > 32:  # decay horizon too long for exact truncation
         return _ewma_segmented_arrow(
             df, order_cols, value_col, alpha=alpha, adjust=adjust,
-            out_col=out_col, num_partitions=num_partitions,
+            out_col=out_col,
         )
 
     sess = df.sparkSession
     scale = 1.0 if adjust else alpha
-    if num_partitions is not None:
-        nbuckets = num_partitions
-    else:
-        # Scale path (ADVICE r10): derive nbuckets from the data volume —
-        # ~8M rows per bucket keeps each bucket-window partition bounded
-        # at any input size, and count() is deterministic, so the
-        # bucketing stays a pure function of the data.
-        n_rows = df.count()
-        nbuckets = max(
-            sess.sparkContext.defaultParallelism, -(-n_rows // 8_000_000)
-        )
-        if splitters == "quantile":
-            nbuckets = min(nbuckets, 1024)  # sketch + cut-expression bound
     fields = [f.name for f in df.schema.fields]
 
-    # 1. order-contiguous buckets from a bounded splitter sketch
-    # (collected once so every consumer sees identical splitters). The
-    # sketch reads df once map-side; splitter values only steer
-    # partitioning, so a nondeterministic upstream cannot change results
-    # — the checkpoint below pins everything value-bearing.
+    # 1. order-contiguous equi-width buckets (min/max collected once so
+    # every consumer sees identical cuts; the cuts only steer
+    # partitioning, the checkpoint below pins everything value-bearing)
     skey = F.col(order_cols[0]).cast("double")
-    bucket = None
-    if splitters == "width":
-        lo_hi = df.agg(F.min(skey).alias("lo"), F.max(skey).alias("hi")).first()
-        lo, hi = lo_hi["lo"], lo_hi["hi"]
-        if lo is None or hi is None or lo == hi:
-            cuts = []
-        elif nbuckets > 64:
-            # Derived-nbuckets scale path: a chained-WHEN over thousands
-            # of cuts would blow up codegen; equi-width buckets have a
-            # closed arithmetic form. (≤64 keeps the pinned fixture
-            # queries on the byte-identical WHEN-chain bits.)
-            cuts = None
-            bucket = F.least(
-                F.lit(nbuckets - 1),
-                F.greatest(
-                    F.lit(0),
-                    F.floor(
-                        (skey - F.lit(lo)) / F.lit(hi - lo) * F.lit(nbuckets)
-                    ).cast("int"),
-                ),
-            )
-        else:
-            cuts = [lo + (hi - lo) * i / nbuckets for i in range(1, nbuckets)]
+    lo_hi = df.agg(F.min(skey).alias("lo"), F.max(skey).alias("hi")).first()
+    lo, hi = lo_hi["lo"], lo_hi["hi"]
+    if lo is None or hi is None or lo == hi:
+        cuts = []
     else:
-        probs = [i / nbuckets for i in range(1, nbuckets)]
-        row = df.agg(
-            F.percentile_approx(skey, probs, 10_000).alias("s")
-        ).first()
-        cuts = row["s"] or []
-    if bucket is None:
-        bucket = F.lit(0)
-        for s in sorted(set(cuts)):
-            bucket = bucket + F.when(skey > F.lit(s), 1).otherwise(0)
+        cuts = [lo + (hi - lo) * i / _EWMA_BUCKETS for i in range(1, _EWMA_BUCKETS)]
+    bucket = F.lit(0)
+    for s in sorted(set(cuts)):
+        bucket = bucket + F.when(skey > F.lit(s), 1).otherwise(0)
 
     # 2. within-bucket positions and within-block scaled cumsum
     w_b = Window.partitionBy("_b").orderBy(*order_cols)
@@ -479,7 +412,7 @@ def ewma_segmented(
         F.count("*").alias("n"),
         F.max_by("_numloc", "_p").alias("s_fin"),
         F.min_by(F.col(value_col).cast("double"), "_p").alias("first"),
-    ).collect()  # <= nbuckets rows — bounded by requested parallelism
+    ).collect()  # <= _EWMA_BUCKETS rows
 
     carries = []
     S, N = 0.0, 0
@@ -521,17 +454,16 @@ def _ewma_segmented_arrow(
     alpha: float,
     adjust: bool = True,
     out_col: str = "ewma",
-    num_partitions: int | None = None,
 ) -> DataFrame:
     """Exact Arrow two-pass fallback for beta outside the JVM path's
-    truncation envelope (alpha ~< 1e-3 or alpha <= 0).
+    truncation envelope (alpha ~< 1e-3).
 
     Classic two-pass parallel scan over a linear recurrence
     (state_t = a_t + beta * state_{t-1} composes associatively across
     segments as S_p = beta^n_p * S_{p-1} + local_p):
 
-    1. range-partition + sort on ``order_cols`` so partitions are ordered
-       runs of the sequence;
+    1. range-partition (``defaultParallelism`` ranges) + sort on
+       ``order_cols`` so partitions are ordered runs of the sequence;
     2. pass 1 (mapInPandas): each partition folds its values with zero
        initial state and emits ONE summary row (pid, n, local_final,
        first_value) — driver receives #partitions rows, composes the
@@ -556,9 +488,8 @@ def _ewma_segmented_arrow(
 
     sess = df.sparkSession
     beta = 1.0 - alpha
-    nparts = num_partitions or sess.sparkContext.defaultParallelism
     sorted_df = (
-        df.repartitionByRange(nparts, *order_cols)
+        df.repartitionByRange(sess.sparkContext.defaultParallelism, *order_cols)
         .sortWithinPartitions(*order_cols)
         .withColumn("__pid", F.spark_partition_id())
         .localCheckpoint(eager=False)
@@ -623,8 +554,7 @@ def _ewma_segmented_arrow(
             num, carry = _ewma_num_scan(x * scale, beta, carry)
             t = offset + np.arange(1, len(x) + 1, dtype="float64")
             if adjust:
-                den = t if beta == 1.0 else (1.0 - beta**t) / (1.0 - beta)
-                vals = num / den
+                vals = num / ((1.0 - beta**t) / (1.0 - beta))
             else:
                 vals = num
             state = (carry, offset + len(x))
@@ -670,21 +600,21 @@ def cumsum_two_level(
     the classic scale killer. Two-level form instead:
 
     1. one bounded pre-pass collects <= ``num_buckets``-1 approximate
-       equi-depth splitters of ``order_col`` (``percentile_approx``
-       sketch; a 1-row driver collect, same bounded-collect idiom as the
-       streaming batch splitters). Collecting — rather than cross-joining
-       the 1-row agg — guarantees both consumers below see IDENTICAL
-       splitters; as two plan subtrees the sketch could merge partials in
+       equi-depth cuts of ``order_col`` (``percentile_approx`` sketch; a
+       1-row driver collect, same bounded-collect idiom as the streaming
+       batch cuts). Collecting — rather than cross-joining the 1-row
+       agg — guarantees both consumers below see IDENTICAL cuts; as two
+       plan subtrees the sketch could merge partials in
        different orders and disagree;
-    2. rows bucket by splitter comparisons (buckets are order-CONTIGUOUS:
+    2. rows bucket by cut comparisons (buckets are order-CONTIGUOUS:
        x <= y implies bucket(x) <= bucket(y), ties share a bucket), and a
        KEYED window cumsums within each bucket — ``num_buckets``-way
        parallel;
     3. per-bucket totals (<= ``num_buckets`` rows) broadcast-join as
        prior-bucket offsets.
 
-    Output is identical to the global window for any splitter values —
-    the splitters only steer partitioning, so ``percentile_approx``'s
+    Output is identical to the global window for any cut values — the
+    cuts only steer partitioning, so ``percentile_approx``'s
     approximation can never change a result. Degenerate inputs fall back
     gracefully: constant/tiny ``order_col`` yields one bucket (the data
     itself is that small or that skewed). ``order_col`` must be non-null;
@@ -694,7 +624,7 @@ def cumsum_two_level(
     a value histogram (distinct keys) see the classic running sum.
     """
 
-    # three consumers read df (the splitter collect below, then the
+    # three consumers read df (the cut collect below, then the
     # keyed-window branch AND the bucket-totals branch of the returned
     # plan — Catalyst has no cross-branch CSE): checkpoint so the
     # upstream pipeline computes once (localCheckpoint over persist —
@@ -704,9 +634,9 @@ def cumsum_two_level(
     row = df.agg(
         F.percentile_approx(order_col, probs, accuracy).alias("s")
     ).first()
-    splitters = sorted(set(row["s"] or []))
+    cuts = sorted(set(row["s"] or []))
     bucket = F.lit(0)
-    for s in splitters:
+    for s in cuts:
         bucket = bucket + F.when(F.col(order_col) > F.lit(s), 1).otherwise(0)
     b = df.withColumn("_bucket", bucket)
     w_in = (

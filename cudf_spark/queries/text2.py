@@ -361,7 +361,7 @@ def dedup_substring_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = load(spark, sf_dir, "documents")
     spans = resolve_duplicate_spans(
-        docs, "doc_id", "text", min_length=20, exact=True, max_gram_freq=64
+        docs, "doc_id", "text", min_length=20, max_gram_freq=64
     )
     return spans.select(
         "doc_id",

@@ -420,14 +420,13 @@ def ewma_per_user(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORDER BY loc.event_id
     """,
     doc="Ungrouped/giant-group EWMA via pure-JVM three-level scan "
-    "(operators/windows.py::ewma_segmented): splitter-bucketed keyed "
-    "windows, fixed-L block scaled cumsums, exactly-truncated lag "
+    "(operators/windows.py::ewma_segmented): 32 equi-width buckets on "
+    "the ts range, so every output bit is the same on any cluster layout; "
+    "keyed windows, fixed-L block scaled cumsums, exactly-truncated lag "
     "composition of block carries, one driver-composed summary row per "
-    "bucket. The 100 TB path where no executor can hold the sequence; "
-    "pandas ewm semantics, adjust=True (verified to rtol 1e-9 against "
-    "pandas on 1M rows in tests/test_operators.py). Rewritten round 9 "
-    "from the Arrow two-pass (28s -> ~2s at sf0.1: the old shape spent "
-    "its wall-clock spinning up 2x32 Python workers).",
+    "bucket. No executor holds the whole sequence; pandas ewm semantics, "
+    "adjust=True (verified to rtol 1e-9 against pandas on 1M rows in "
+    "tests/test_operators.py).",
 )
 def ewma_global_segmented(spark: SparkSession, sf_dir: str) -> DataFrame:
     from cudf_spark.operators.windows import ewma_segmented
@@ -438,25 +437,7 @@ def ewma_global_segmented(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("event_id", "ts", "value")
     )
     return (
-        # num_partitions pinned + deterministic equi-width splitters
-        # (ADVICE r09): the bucketing — and therefore every output BIT
-        # ahead of the round(, 4) — no longer depends on
-        # defaultParallelism or on percentile_approx's
-        # partition-merge-order, so the hash is identical on any cluster
-        # layout, not just the local[4]/local[32] ones the sweep runs.
-        # 32 is a FIXTURE-SCALE determinism pin, not the scale setting
-        # (ADVICE r10): at 100 TB pass num_partitions=None and the
-        # operator derives nbuckets from the row count (~8M rows per
-        # bucket, still deterministic) so no bucket ever holds 1/32 of
-        # the table — see ewma_segmented's sizing note.
-        ewma_segmented(
-            e,
-            ["ts", "event_id"],
-            "value",
-            alpha=0.3,
-            num_partitions=32,
-            splitters="width",
-        )
+        ewma_segmented(e, ["ts", "event_id"], "value", alpha=0.3)
         .select("event_id", F.round("ewma", 4).alias("ewma"))
         .orderBy("event_id")
     )

@@ -1,7 +1,7 @@
 """SparkSession factory tuned for the engine.
 
 Runs ``local[$SPARK_GRAFT_CPUS]`` (default: the host's core count, one
-JVM) with:
+JVM) with one shuffle partition per core and:
 
 - AQE on (runtime re-plan: broadcast conversion, partition coalescing,
   skew-join splitting) — mirrors cudf-polars' deferred broadcast-vs-shuffle
@@ -20,13 +20,12 @@ import os
 from pyspark.sql import SparkSession
 
 
-def get_spark(app_name: str = "cudf_spark", *, shuffle_partitions: int | None = None) -> SparkSession:
+def get_spark(app_name: str = "cudf_spark") -> SparkSession:
     cpus = os.environ.get("SPARK_GRAFT_CPUS", str(os.cpu_count()))
-    parts = shuffle_partitions or int(cpus)
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)
-        .config("spark.sql.shuffle.partitions", str(parts))
+        .config("spark.sql.shuffle.partitions", cpus)
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
@@ -37,10 +36,7 @@ def get_spark(app_name: str = "cudf_spark", *, shuffle_partitions: int | None = 
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         # Shuffle/spill block codec; lz4 vs zstd is measured in OPTIMIZATION_r11.md §6b.
-        .config(
-            "spark.io.compression.codec",
-            os.environ.get("SPARK_GRAFT_IO_CODEC", "lz4"),
-        )
+        .config("spark.io.compression.codec", "lz4")
     )
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

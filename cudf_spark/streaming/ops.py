@@ -13,30 +13,14 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from cudf_spark.catalog import normalize_events_ts, read_parquet
+from cudf_spark.catalog import normalize_events_ts, read_events
 
 
 def events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """``events`` as a file-source stream (the parquet-channel analogue of
     libcudf_streaming's chunked parquet source, cpp/libcudf_streaming/src/
     parquet.cpp), with ``ts`` normalized like catalog.load."""
-    # the nanosAsLong conf mutates the SHARED session: every later
-    # parquet read of ns-timestamp files would silently return bigint.
-    # It must stay set while THIS stream runs (the scan consults it at
-    # micro-batch time for ns-vintage files), but when the fixture is a
-    # native-micros vintage it was never needed — restore the caller's
-    # value in that case instead of leaking the override
-    prev = spark.conf.get("spark.sql.legacy.parquet.nanosAsLong", None)
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    schema = read_parquet(spark, f"{sf_dir}/events.parquet").schema
-    needs_legacy = dict((f.name, f.dataType.simpleString()) for f in schema).get(
-        "ts"
-    ) == "bigint"
-    if not needs_legacy:
-        if prev is None:
-            spark.conf.unset("spark.sql.legacy.parquet.nanosAsLong")
-        else:
-            spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", prev)
+    schema = read_events(spark, f"{sf_dir}/events.parquet").schema
     # the file source wants a directory; glob down to the events table
     return normalize_events_ts(
         spark.readStream.schema(schema)
@@ -298,7 +282,7 @@ def enrich_with_static(
 def user_tier_dim(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Static per-user dimension derived deterministically from the events
     table's user universe (stand-in for an external user-profile table)."""
-    users = read_parquet(spark, f"{sf_dir}/events.parquet").select("user_id").distinct()
+    users = read_events(spark, f"{sf_dir}/events.parquet").select("user_id").distinct()
     return users.select(
         "user_id",
         F.when(F.col("user_id") % 3 == 0, F.lit("gold"))

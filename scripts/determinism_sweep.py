@@ -39,17 +39,13 @@ SF_DEFAULT = "/root/testdata/sf0.01"
 
 
 def worker(nparts: int, sf: str) -> int:
-    import hashlib
-    import json
-
     from pyspark.sql import SparkSession
 
     from cudf_spark.queries import REGISTRY
+    from scripts.driver_sim import vhash
 
-    # Layout 2 also changes the MASTER core count (ADVICE r09): all-
-    # local[4] layouts cannot see a dependence on defaultParallelism —
-    # exactly how ewma_segmented's nbuckets default slipped past the
-    # sweep before the call site pinned num_partitions.
+    # Layout 2 also changes the MASTER core count: all-local[4] layouts
+    # cannot see a result that depends on defaultParallelism.
     builder = (
         SparkSession.builder.master("local[7]" if nparts == 13 else "local[4]")
         .config("spark.sql.shuffle.partitions", str(nparts))
@@ -67,12 +63,6 @@ def worker(nparts: int, sf: str) -> int:
         ).config("spark.sql.session.timeZone", "America/New_York")
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
-
-    def vhash(cols, rows):
-        cols = list(cols)
-        order = sorted(range(len(cols)), key=lambda i: cols[i])
-        norm = sorted([tuple(str(r[i]) for i in order) for r in rows])
-        return hashlib.md5(json.dumps(norm).encode()).hexdigest()[:12]
 
     for name, q in sorted(REGISTRY.items()):
         try:

@@ -42,7 +42,6 @@ skew, duplication, emptiness — is fair game per seed.
 from __future__ import annotations
 
 import argparse
-import hashlib
 import json
 import os
 import shutil
@@ -54,6 +53,8 @@ import pyarrow.parquet as pq
 
 _repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, _repo)
+
+from scripts.driver_sim import vhash  # noqa: E402
 
 TABLES = [
     "region", "nation", "customer", "supplier", "part",
@@ -287,14 +288,6 @@ def gen_fixture(seed: int, outdir: str,
     return knobs
 
 
-def vhash(cols, rows) -> str:
-    """Byte-for-byte the driver comparator (scripts/driver_sim.py vhash)."""
-    cols = list(cols)
-    order = sorted(range(len(cols)), key=lambda i: cols[i])
-    norm = sorted([tuple(str(r[i]) for i in order) for r in rows])
-    return hashlib.md5(json.dumps(norm).encode()).hexdigest()[:12]
-
-
 def cohort_for_seed(names: list[str], seed: int, size: int) -> list[str]:
     """Seed-rotated cohort: a seeded shuffle of the full oracle-backed
     registry, first `size` names — across consecutive seeds the overlap
@@ -397,7 +390,7 @@ def main() -> int:
     from cudf_spark.session import get_spark
 
     os.environ.setdefault("SPARK_GRAFT_CPUS", "8")
-    spark = get_spark("cudf_spark_fuzz", shuffle_partitions=8)
+    spark = get_spark("cudf_spark_fuzz")
     only = set(args.only.split(",")) if args.only else None
     overrides = json.loads(args.knobs) if args.knobs else None
 

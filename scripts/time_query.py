@@ -1,7 +1,7 @@
 """Fresh-process single-execution timer for registry queries.
 
 The SCALING.md perf claims are min-of-N FRESH-PROCESS seconds at sf0.1 —
-one full execution (build + count) per process, no warm-up, so codegen/
+one full execution (build + noop write) per process, no warm-up, so codegen/
 JIT and block-manager state from earlier queries can't flatter (or
 inflate) the number the way a sequential-session audit does (VERDICT r09
 item 3: committed ROWCOUNTS disagreed ~2x with min-of-N claims even
@@ -15,6 +15,10 @@ after the leak fix). This script IS that protocol:
 prints/returns the per-query minimum; the JSON line it emits is what
 SCALING.md tables and the ``secs_fresh_min`` entries merged into
 ROWCOUNTS_sf01.json cite. Override scale with SPARK_GRAFT_SF_DIR.
+
+The action is a write to Spark's ``noop`` sink, as in bench.py: it runs
+every projection. ``count()`` would prune an unreferenced pandas-UDF
+projection and time a UDF-only query without running its UDF.
 """
 
 from __future__ import annotations
@@ -30,25 +34,14 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 
-def run_once(names: list[str], warmup: bool = False, noop: bool = False) -> dict[str, float]:
+def run_once(names: list[str], warmup: bool = False) -> dict[str, float]:
     from cudf_spark.queries import REGISTRY
     from cudf_spark.session import get_spark
 
     spark = get_spark("time_query")
 
     def execute(df) -> None:
-        if noop:
-            # bench.py's action (guide §1.4). REQUIRED for the map-only
-            # pandas-UDF queries (text_bpe/unigram_tokenize,
-            # text_normalize_nfc): count() prunes an unreferenced scalar
-            # UDF projection entirely, so the default action times those
-            # queries WITHOUT running the UDF (r11 §3.14 finding —
-            # text_unigram_tokenize reads ~0.3 s under count() vs ~3 s
-            # real). Kept opt-in so committed FRESH_MINS numbers stay on
-            # their original protocol.
-            df.write.format("noop").mode("overwrite").save()
-        else:
-            df.count()
+        df.write.format("noop").mode("overwrite").save()
 
     out: dict[str, float] = {}
     for name in names:
@@ -67,7 +60,6 @@ def run_once(names: list[str], warmup: bool = False, noop: bool = False) -> dict
 def main(argv: list[str]) -> int:
     n_min = 0
     warmup = False
-    noop = False
     while argv and argv[0].startswith("--"):
         if argv[0] == "--min":
             n_min = int(argv[1])
@@ -75,19 +67,16 @@ def main(argv: list[str]) -> int:
         elif argv[0] == "--warmup":
             warmup = True
             argv = argv[1:]
-        elif argv[0] == "--noop":
-            noop = True
-            argv = argv[1:]
         else:
             print(f"unknown flag {argv[0]}")
             return 2
     names = argv
     if not names:
-        print("usage: time_query.py [--min N] [--warmup] [--noop] query [query ...]")
+        print("usage: time_query.py [--min N] [--warmup] query [query ...]")
         return 2
 
     if not n_min:
-        print(json.dumps(run_once(names, warmup, noop)))
+        print(json.dumps(run_once(names, warmup)))
         return 0
 
     best: dict[str, float] = {}
@@ -99,8 +88,6 @@ def main(argv: list[str]) -> int:
             cmd = [sys.executable, os.path.abspath(__file__)]
             if warmup:
                 cmd.append("--warmup")
-            if noop:
-                cmd.append("--noop")
             proc = subprocess.run(
                 cmd + [name],
                 capture_output=True,
@@ -117,7 +104,7 @@ def main(argv: list[str]) -> int:
             print(f"  round {i + 1}/{n_min}: {got}", file=sys.stderr)
     print(
         json.dumps(
-            {"sf_dir": SF_DIR, "min_of": n_min, "warmup": warmup, "noop": noop,
+            {"sf_dir": SF_DIR, "min_of": n_min, "warmup": warmup,
              "secs_fresh_min": best}
         )
     )

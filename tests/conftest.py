@@ -27,7 +27,7 @@ def spark():
     from cudf_spark.session import get_spark
 
     os.environ.setdefault("SPARK_GRAFT_CPUS", "4")
-    spark = get_spark("cudf_spark_tests", shuffle_partitions=4)
+    spark = get_spark("cudf_spark_tests")
     yield spark
     spark.stop()
 

@@ -79,7 +79,7 @@ def test_rolling_min_periods_nulls(spark):
 def test_wordpiece_tokenizer(spark):
     from pyspark.sql import functions as F
 
-    from cudf_spark.operators.tokenizers import wordpiece_tokenize
+    from cudf_spark.operators.tokenizers import wordpiece_tokenize_udf
 
     vocab = ["scan", "join", "merge", "sort", "filt", "##er", "##s", "the", "a", "fast", "slow"]
     df = spark.createDataFrame(
@@ -88,7 +88,9 @@ def test_wordpiece_tokenizer(spark):
     )
     got = {
         r["id"]: r["pieces"]
-        for r in wordpiece_tokenize(df, spark, "text", vocab).collect()
+        for r in df.withColumn(
+            "pieces", wordpiece_tokenize_udf(spark, vocab)(F.col("text"))
+        ).collect()
     }
     assert got[1] == ["the", "fast", "scan"]
     assert got[2] == ["filt", "##er", "join", "##s"]
@@ -275,9 +277,7 @@ def test_ewma_segmented_matches_pandas_1m_rows(spark):
 
     for adjust in (True, False):
         got = (
-            ewma_segmented(
-                df, ["idx"], "v", alpha=0.05, adjust=adjust, num_partitions=8
-            )
+            ewma_segmented(df, ["idx"], "v", alpha=0.05, adjust=adjust)
             .orderBy("idx")
             .select("ewma")
             .toPandas()["ewma"]
@@ -317,6 +317,31 @@ def test_ewma_segmented_extreme_alpha_paths(spark):
                 got, expect, rtol=1e-9, atol=1e-9,
                 err_msg=f"alpha={alpha} adjust={adjust}",
             )
+
+
+def test_ewma_rejects_alpha_outside_pandas_domain(spark):
+    """pandas ewm raises for alpha outside (0, 1]; both JVM EWMA operators
+    raise the same error rather than returning the input (alpha > 1) or
+    falling back to the Arrow path (alpha <= 0). alpha == 1, the
+    no-memory case, stays valid: ewma == x."""
+    from cudf_spark.operators.windows import ewma_grouped_scan, ewma_segmented
+
+    df = spark.createDataFrame(
+        [(0, 0, 1.0), (0, 1, 3.0), (1, 2, 5.0)], "g long, idx long, v double"
+    )
+    ops = (
+        lambda a: ewma_segmented(df, ["idx"], "v", alpha=a),
+        lambda a: ewma_grouped_scan(df, ["g"], ["idx"], "v", alpha=a),
+    )
+    for alpha in (0.0, -0.5, 1.5):
+        with pytest.raises(ValueError, match="alpha must satisfy: 0 < alpha <= 1"):
+            pd.Series([1.0]).ewm(alpha=alpha)
+        for op in ops:
+            with pytest.raises(ValueError, match="alpha must satisfy: 0 < alpha <= 1"):
+                op(alpha)
+    for op in ops:
+        got = op(1.0).orderBy("idx").select("ewma").toPandas()["ewma"].tolist()
+        assert got == [1.0, 3.0, 5.0]
 
 
 def test_symspell_pairs_catches_every_ed1_shape(spark):
@@ -565,21 +590,23 @@ def test_functions_review_fixes_round6(spark):
     )
     assert ts.collect()[0].s == "02 o'clock"
 
-    # events_stream no longer leaks nanosAsLong into the shared session
-    # for native-micros fixtures (ns-vintage fixtures keep it set because
-    # the scan consults it at micro-batch time)
+    # Neither events reader leaks nanosAsLong into the shared session for
+    # native-micros fixtures (ns-vintage fixtures keep it set because the
+    # scan consults it when it runs)
     import tempfile
 
+    from cudf_spark.catalog import NANOS_AS_LONG, load
     from cudf_spark.streaming.ops import events_stream
 
     with tempfile.TemporaryDirectory() as tmp:
         spark.sql(
             "SELECT TIMESTAMP'2024-01-15 00:00:00' AS ts, 1 AS user_id"
         ).write.mode("overwrite").parquet(f"{tmp}/events.parquet")
-        before = spark.conf.get("spark.sql.legacy.parquet.nanosAsLong", None)
-        events_stream(spark, tmp)
-        after = spark.conf.get("spark.sql.legacy.parquet.nanosAsLong", None)
-        assert after == before  # micros vintage: no session-wide leak
+        for read in (events_stream, lambda s, d: load(s, d, "events")):
+            spark.conf.unset(NANOS_AS_LONG)
+            read(spark, tmp)
+            # micros vintage: no session-wide leak
+            assert spark.conf.get(NANOS_AS_LONG, None) is None
 
 
 def test_asof_join_row_atomic_null_payload(spark):
@@ -689,13 +716,11 @@ def test_similarity_query_guards_and_null_dedup(spark):
     assert groups[0].n_dups == 2 and groups[0].canonical_id == 3
 
 
-def test_ewma_segmented_width_splitters_layout_stable(spark):
-    """ADVICE r09: with splitters="width" and num_partitions pinned, the
-    bucketing derives from two deterministic scalars (global min/max), so
-    the output must be BIT-identical under any input partitioning — the
-    layout dependence percentile_approx's merge-order carries. Also
-    checks correctness vs pandas (equi-width buckets are still exact, the
-    splitters only steer partitioning)."""
+def test_ewma_segmented_equi_width_layout_stable(spark):
+    """The fixed equi-width bucketing derives from two deterministic
+    scalars (global min/max), so the output must be BIT-identical under
+    any input partitioning. Also checks correctness vs pandas (the bucket
+    cuts only steer partitioning)."""
     import numpy as np
     import pandas as pd
 
@@ -709,9 +734,7 @@ def test_ewma_segmented_width_splitters_layout_stable(spark):
     for parts in (3, 16, 31):
         df = spark.createDataFrame(pdf).repartition(parts)
         got = (
-            ewma_segmented(
-                df, ["idx"], "v", alpha=0.3, num_partitions=8, splitters="width"
-            )
+            ewma_segmented(df, ["idx"], "v", alpha=0.3)
             .orderBy("idx")
             .select("ewma")
             .toPandas()["ewma"]
@@ -724,7 +747,7 @@ def test_ewma_segmented_width_splitters_layout_stable(spark):
     np.testing.assert_allclose(outs[0], expect, rtol=1e-9, atol=1e-9)
 
 
-def test_ewma_segmented_width_splitters_constant_key(spark):
+def test_ewma_segmented_equi_width_constant_key(spark):
     """Degenerate equi-width case: a CONSTANT order key collapses to one
     bucket (lo == hi -> no cuts) and must still be exact."""
     import numpy as np
@@ -739,9 +762,7 @@ def test_ewma_segmented_width_splitters_constant_key(spark):
     )
     df = spark.createDataFrame(pdf).repartition(4)
     got = (
-        ewma_segmented(
-            df, ["k", "tie"], "v", alpha=0.2, num_partitions=8, splitters="width"
-        )
+        ewma_segmented(df, ["k", "tie"], "v", alpha=0.2)
         .orderBy("tie")
         .select("ewma")
         .toPandas()["ewma"]
@@ -835,43 +856,6 @@ def test_ewma_per_user_oracle_vs_recursive_replay(duck):
     expect = duck.execute(recursive_sql).fetchall()
     assert len(got) == len(expect) and len(got) > 0
     assert got == expect
-
-
-def test_ewma_segmented_derived_nbuckets_closed_form_bucket(spark):
-    """ADVICE r10 scale path: num_partitions=None derives nbuckets from
-    the row count, and width mode switches to the closed-form arithmetic
-    bucket above 64 cuts. Both paths must still reproduce pandas ewm —
-    the bucketing only steers partitioning."""
-    import numpy as np
-    import pandas as pd
-
-    from cudf_spark.operators.windows import ewma_segmented
-
-    rng = np.random.default_rng(11)
-    n = 20_000
-    pdf = pd.DataFrame(
-        {"idx": np.arange(n, dtype="int64"), "v": rng.normal(5.0, 2.0, n)}
-    )
-    df = spark.createDataFrame(pdf).repartition(8)
-    for kwargs in (
-        {"num_partitions": None, "splitters": "width"},   # derived nbuckets
-        {"num_partitions": 128, "splitters": "width"},    # closed-form bucket
-        {"num_partitions": None, "splitters": "quantile"},
-    ):
-        got = (
-            ewma_segmented(df, ["idx"], "v", alpha=0.3, **kwargs)
-            .orderBy("idx")
-            .select("ewma")
-            .toPandas()["ewma"]
-            .to_numpy()
-        )
-        expect = pdf["v"].ewm(alpha=0.3, adjust=True).mean().to_numpy()
-        np.testing.assert_allclose(got, expect, rtol=1e-9, atol=1e-9)
-
-    import pytest as _pytest
-
-    with _pytest.raises(ValueError, match="splitters"):
-        ewma_segmented(df, ["idx"], "v", alpha=0.3, splitters="widht")
 
 
 def test_ewma_global_oracle_vs_recursive_replay(duck):

@@ -8,8 +8,6 @@ global top-k as TakeOrderedAndProject, whole-stage codegen coverage.
 
 from __future__ import annotations
 
-import os
-
 import pytest
 
 from cudf_spark.plans import plan_nodes
@@ -151,12 +149,9 @@ def test_scale_confs_pinned(spark):
     assert conf.get("spark.sql.optimizer.runtime.bloomFilter.enabled") == "true"
     assert conf.get("spark.sql.execution.arrow.pyspark.enabled") == "true"
     assert conf.get("spark.sql.session.timeZone") == "UTC"
-    # Shuffle/spill codec: lz4 locally (r11 idle-host A/B found no zstd
-    # win on loopback shuffles), env-overridable for network-bound
-    # clusters via SPARK_GRAFT_IO_CODEC (OPTIMIZATION_r11.md §6b).
-    assert conf.get("spark.io.compression.codec") == os.environ.get(
-        "SPARK_GRAFT_IO_CODEC", "lz4"
-    )
+    # Shuffle/spill codec: lz4 (an idle-host A/B found no zstd win on
+    # loopback shuffles, OPTIMIZATION_r11.md §6b).
+    assert conf.get("spark.io.compression.codec") == "lz4"
 
 
 def test_win_rolling_single_exchange_no_global_sort(spark):

@@ -73,8 +73,8 @@ def test_duplicate_spans_catches_within_doc_repeats(spark):
 
 def test_duplicate_spans_hot_gram_cap(spark):
     # A mega-frequent gram (planted boilerplate) is dropped from anchoring
-    # once its occurrence count exceeds max_gram_freq, in BOTH physical
-    # shapes; a normal duplicated span is still reported.
+    # once its occurrence count exceeds max_gram_freq; a normal duplicated
+    # span is still reported.
     boiler = "B" * 200  # its 20-gram occurs 181x in one doc -> over any small cap
     shared = "the quick brown fox jumps over the lazy dog"
     docs = spark.createDataFrame(
@@ -91,17 +91,16 @@ def test_duplicate_spans_hot_gram_cap(spark):
         for r in duplicate_spans(docs, "id", "text", min_length=20).collect()
     }
     assert uncapped[1] == (1, len(boiler))
-    for skew_safe in (False, True):
-        spans = {
-            r.id: (r.span_pos, r.span_len)
-            for r in duplicate_spans(
-                docs, "id", "text", min_length=20, max_gram_freq=50, skew_safe=skew_safe
-            ).collect()
-        }
-        # 181 occurrences > cap=50 -> the boilerplate gram stops anchoring.
-        assert 1 not in spans, (skew_safe, spans)
-        assert spans[100] == (6, len(shared)), skew_safe
-        assert spans[101] == (6, len(shared)), skew_safe
+    spans = {
+        r.id: (r.span_pos, r.span_len)
+        for r in duplicate_spans(
+            docs, "id", "text", min_length=20, max_gram_freq=50
+        ).collect()
+    }
+    # 181 occurrences > cap=50 -> the boilerplate gram stops anchoring.
+    assert 1 not in spans, spans
+    assert spans[100] == (6, len(shared))
+    assert spans[101] == (6, len(shared))
 
 
 def _brute_spans(texts: dict[int, str], k: int) -> dict[int, set[tuple[int, int]]]:
