@@ -6,13 +6,13 @@ asset id / shard, never collect). Decode / feature-extract / resize /
 frame-sample run as Arrow-batched ``mapInPandas`` operators so codec work
 is vectorized per batch and scales with partitions.
 
-The compressed-format codecs (PIL/ffmpeg/soundfile) are NOT in this
-container, so those decode kernels are stubbed two ways:
-- ``decode_image_meta`` parses our deterministic fake header (magic
-  ``FIMG`` + big-endian u32 width/height) — real Spark plumbing (schema,
-  batching, null handling) with a fake codec;
-- ``decode_image_pixels`` raises ``NotImplementedError`` exactly where a
-  real decoder plugs in.
+The compressed-format codecs (PIL/ffmpeg/soundfile) are not dependencies,
+so image payloads use a deterministic fake format (magic ``FIMG`` +
+big-endian u32 width/height + 8-bit pixels, built by
+``fake_image_gradient`` / ``fake_image_texture``) parsed by ``_parse_fimg``
+— real Spark plumbing (schema, batching, null handling) with a fake codec.
+Malformed or missing payloads surface as ``valid=false`` rows instead of
+task failures.
 
 Two UNCOMPRESSED production formats need no external codec at all and are
 decoded for real: 24-bit BMP (``decode_bmp_pixels`` — the struct layout
@@ -27,7 +27,6 @@ import struct
 from collections.abc import Iterator
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 MAGIC = b"FIMG"
@@ -40,48 +39,6 @@ ASSET_SCHEMA = T.StructType(
         T.StructField("meta", T.MapType(T.StringType(), T.StringType()), True),
     ]
 )
-
-IMAGE_META_SCHEMA = (
-    "asset_id long, kind string, width int, height int, n_bytes int, valid boolean"
-)
-
-
-def fake_image_bytes(width: int, height: int, fill: int = 0) -> bytes:
-    """Deterministic fake image payload: FIMG + u32 w + u32 h + pixel bytes."""
-    return MAGIC + struct.pack(">II", width, height) + bytes([fill % 256]) * (width * height)
-
-
-def decode_image_meta(assets: DataFrame) -> DataFrame:
-    """mapInPandas decode of the fake header → typed metadata columns.
-
-    Real plumbing: Arrow batch in/out, per-row binary parsing, malformed
-    payloads surface as valid=false rows instead of task failures.
-    """
-
-    def batches(it: Iterator) -> Iterator:
-        import pandas as pd
-
-        for pdf in it:
-            rows = []
-            for aid, kind, data in zip(pdf["asset_id"], pdf["kind"], pdf["data"]):
-                ok = data is not None and bytes(data[:4]) == MAGIC and len(data) >= 12
-                w, h = struct.unpack(">II", bytes(data[4:12])) if ok else (0, 0)
-                rows.append((aid, kind, w, h, len(data) if data is not None else 0, bool(ok)))
-            yield pd.DataFrame(
-                rows, columns=["asset_id", "kind", "width", "height", "n_bytes", "valid"]
-            )
-
-    return assets.mapInPandas(batches, schema=IMAGE_META_SCHEMA)
-
-
-def decode_image_pixels(assets: DataFrame) -> DataFrame:
-    """Full pixel decode — requires a real codec (PIL/libjpeg), absent here."""
-    raise NotImplementedError(
-        "compressed-format pixel decode needs an image codec (PIL) not "
-        "present in this container; decode_bmp_pixels is the REAL no-"
-        "dependency decode path (uncompressed 24-bit BMP) and "
-        "decode_image_meta exercises the rest of the Spark-side plumbing"
-    )
 
 
 def fake_image_gradient(width: int, height: int, base: int = 0) -> bytes:
@@ -205,9 +162,8 @@ def frame_sample(assets: DataFrame, every_n: int = 10) -> DataFrame:
     are exact-int sums / IEEE double divide — SQL-oracle reproducible.
 
     Malformed/truncated payloads yield ZERO frame rows (there is no
-    per-frame place for a valid flag) — run :func:`decode_video_meta`
-    first when corrupt-asset VISIBILITY matters; this operator's
-    contract is frames-of-decodable-assets only.
+    per-frame place for a valid flag); this operator's contract is
+    frames-of-decodable-assets only.
     """
     if every_n < 1:
         # range(0, n, 0) raises INSIDE the Arrow worker (a task failure,
@@ -236,12 +192,6 @@ def frame_sample(assets: DataFrame, every_n: int = 10) -> DataFrame:
             )
 
     return assets.mapInPandas(batches, schema=FRAME_SAMPLE_SCHEMA)
-
-
-def filter_valid_images(assets: DataFrame, min_width: int = 1) -> DataFrame:
-    """Composable pipeline step: decode meta → keep structurally valid assets."""
-    meta = decode_image_meta(assets)
-    return meta.filter(F.col("valid") & (F.col("width") >= min_width))
 
 
 def fake_image_texture(width: int, height: int, mult: int, base: int = 0) -> bytes:
@@ -395,8 +345,8 @@ def audio_frame_energies(assets: DataFrame, *, frame: int = 10) -> DataFrame:
     engine-exact.
 
     Malformed/truncated payloads yield ZERO frame rows (no per-frame
-    place for a valid flag) — run :func:`decode_audio_meta` first when
-    corrupt-asset visibility matters.
+    place for a valid flag) — run :func:`audio_features`, which has a
+    ``valid`` column, when corrupt-asset visibility matters.
     """
     if frame < 1:
         raise ValueError(f"audio_frame_energies: frame ({frame}) must be >= 1")

@@ -5,7 +5,7 @@ DataFrame ops.
 
 Scale design (100 TB):
 - exact dedup  — one hash-shuffle groupBy on a 128-bit digest; no pairwise
-  work.
+  work (inline in queries/text.py:dedup_exact_bow).
 - minhash-LSH  — per-doc signature (narrow, one explode + one groupBy),
   band buckets (equi-join keys!), candidate pairs only within buckets,
   jaccard verify on the candidates. Pairwise work is proportional to true
@@ -36,25 +36,6 @@ def minhash_seeds(n: int) -> list[tuple[int, int]]:
         ((2 * i + 1) * 1_103_515_245 % MINHASH_P or 1, (12345 + i * 2_654_435_761) % MINHASH_P)
         for i in range(n)
     ]
-
-
-def exact_dedup_groups(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
-    """Exact duplicate groups on normalized text: digest -> (size, canonical id).
-
-    NULL-text rows are EXCLUDED: md5(NULL) is NULL and groupBy treats
-    NULL digests as equal, so a corpus of failed extractions would
-    collapse into ONE group and a keep-canonical consumer would delete
-    every text-less doc but one — a missing document must stay
-    distinguishable from a duplicate one (the word_shingles null
-    philosophy).
-    """
-    digest = F.md5(normalize_text(F.col(text_col)))
-    return (
-        df.filter(F.col(text_col).isNotNull())
-        .select(F.col(id_col), digest.alias("digest"))
-        .groupBy("digest")
-        .agg(F.count("*").alias("n_dups"), F.min(id_col).alias("canonical_id"))
-    )
 
 
 def minhash_signature(

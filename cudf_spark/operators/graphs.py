@@ -194,174 +194,9 @@ def connected_components(
             return labels.withColumnRenamed("label", "component")
     raise RuntimeError(
         f"connected_components did not converge in {max_iter} rounds; "
-        "the graph has a long chain — raise max_iter, or use "
-        "connected_components_star (O(log n) rounds on any topology)"
+        "the graph has a long chain — raise max_iter, or pre-contract "
+        "chains"
     )
-
-
-def connected_components_star(
-    edges: DataFrame,
-    src: str = "src",
-    dst: str = "dst",
-    *,
-    max_iter: int = 25,
-) -> DataFrame:
-    """Alternating large-star/small-star connected components (Kiveris et
-    al., "Connected Components in MapReduce and Beyond", SoCC'14 — public
-    literature). Same output contract as :func:`connected_components`:
-    (node, component) with component = min reachable node id.
-
-    Where min-label propagation floods one hop per round (rounds =
-    eccentricity of the min node — fine for dense near-dup blobs, fatal
-    for long chains), the star operations rewire the edge set itself:
-    large-star hangs every larger neighbor under the local minimum,
-    small-star flattens the rest; components contract to stars in
-    O(log n) rounds on ANY topology, each round two keyed shuffles
-    (groupBy min + join back) over a monotonically shrinking edge list.
-
-    The per-round convergence check rides the same job that materializes
-    the round (count + xxhash64 checksum in one aggregate), and lineage
-    is truncated by the same lazy localCheckpoint pattern as the
-    propagation variant.
-
-    Measured head-to-head on the sf0.1 LSH near-dup graph
-    (dedup_duplicate_clusters): propagation 2.7-3.1 s, star 4.1-4.3 s —
-    dense blobs converge in ~4 cheap propagation rounds, while each star
-    round pays an explode + distinct over both edge orientations. So
-    propagation stays the default for near-dup clustering; use this
-    variant when the graph may contain long chains (propagation raises at
-    max_iter there, this converges in O(log n) — proven on a 60-node path
-    in tests/test_graphs.py).
-    """
-    e = (
-        edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
-        .filter(F.col(src) != F.col(dst))
-        .distinct()
-    )
-    nodes = (
-        e.select(F.col("u").alias("node"))
-        .unionByName(e.select(F.col("v").alias("node")))
-        .distinct()
-        .localCheckpoint(eager=False)
-    )
-
-    def _round_state(df: DataFrame):
-        row = df.agg(
-            F.count(F.lit(1)).alias("n"),
-            # xor-fold of per-edge hashes: order-independent, overflow-free
-            # (a sum of xxhash64 values overflows long under ANSI mode)
-            F.coalesce(F.expr("bit_xor(xxhash64(u, v))"), F.lit(0)).alias("chk"),
-        ).collect()[0]
-        return row["n"], row["chk"]
-
-    prev = None
-    for _ in range(max_iter):
-        # large-star: every neighbor v > u hangs under m = min(N(u) ∪ {u})
-        und = e.unionByName(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
-        mins = und.groupBy("u").agg(
-            F.least(F.min("v"), F.first("u")).alias("m")
-        )
-        large = (
-            und.join(mins, "u")
-            .filter(F.col("v") > F.col("u"))
-            .select(F.col("v").alias("u"), F.col("m").alias("v"))
-            .filter(F.col("u") != F.col("v"))
-            .distinct()
-        )
-        # small-star: orient large-to-small, flatten onto the local minimum
-        o = large.select(
-            F.greatest("u", "v").alias("u"), F.least("u", "v").alias("v")
-        )
-        omins = o.groupBy("u").agg(F.min("v").alias("m"))
-        small = (
-            o.join(omins, "u")
-            .select(
-                F.explode(F.array(F.col("v"), F.col("u"))).alias("u"), F.col("m").alias("v")
-            )
-            .filter(F.col("u") != F.col("v"))
-            .distinct()
-            .localCheckpoint(eager=False)
-        )
-        state = _round_state(small)
-        e = small
-        if state == prev:
-            break
-        prev = state
-    else:
-        raise RuntimeError(
-            f"connected_components_star did not converge in {max_iter} rounds"
-        )
-    # converged star edges point node -> component min; roots map to self
-    assigned = e.select(F.col("u").alias("node"), F.col("v").alias("component"))
-    roots = nodes.join(assigned, "node", "left_anti").select(
-        "node", F.col("node").alias("component")
-    )
-    return assigned.unionByName(roots)
-
-
-def pagerank(
-    edges: DataFrame,
-    *,
-    src: str = "src",
-    dst: str = "dst",
-    damping: float = 0.85,
-    iters: int = 5,
-) -> DataFrame:
-    """Fixed-iteration PageRank (Page et al. 1999 — public literature)
-    over a directed edge list: ``(node, pr)`` after ``iters`` power
-    iterations of ``pr = (1-d)/N + d · Σ_in pr/outdeg``.
-
-    In a curation pipeline this is the link-graph quality prior (the
-    "rank documents by how the web links to them" signal Common-Crawl
-    pipelines mix into sampling weights). Fixed iteration count — not
-    convergence detection — keeps the job a static 5-round DAG the
-    oracle can unroll.
-
-    Per round: one keyed join (edge × rank on src) + one keyed groupBy
-    (sum of contributions on dst) — the same one-aggregate round shape
-    as :func:`connected_components`: the zero row unioned per node
-    replaces the former |V|⋈|V| left merge-join that only re-attached
-    dangling-in-degree nodes (``sum(c ∪ {0}) == coalesce(sum(c), 0)``,
-    and the union is shuffle-free). Lineage truncated per round; the
-    edge-degree join is precomputed once. N (node count) is a single
-    collected scalar.
-
-    Dangling nodes (outdeg 0) contribute no mass (the "lost mass"
-    simplification); symmetrize the edge list — as the bipartite
-    click-graph query does — when conservation matters.
-    """
-    e = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
-    nodes = (
-        e.select(F.col("src").alias("node"))
-        .unionByName(e.select(F.col("dst").alias("node")))
-        .distinct()
-        .localCheckpoint(eager=False)
-    )
-    deg = e.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
-    ed = e.join(deg, "src").localCheckpoint(eager=False)  # reused every round
-    n = nodes.count()
-    if n == 0:  # empty edge list: no nodes, no ranks — avoid 1/0 below
-        return nodes.withColumn("pr", F.lit(0.0))
-    base = (1.0 - damping) / n
-    ranks = nodes.withColumn("pr", F.lit(1.0 / n))
-    for _ in range(iters):
-        # One-aggregate round: a 0-contribution row per node rides the
-        # sum (exact for the non-negative contributions: x + 0.0 == x),
-        # so every node — dangling-in-degree ones included — appears in
-        # the aggregate and the former |V|⋈|V| left merge-join vanishes.
-        ranks = (
-            ed.join(ranks, ed.src == ranks.node)
-            .select(F.col("dst").alias("node"), (F.col("pr") / F.col("deg")).alias("c"))
-            .unionByName(nodes.select("node", F.lit(0.0).alias("c")))
-            .groupBy("node")
-            .agg(F.sum("c").alias("in_mass"))
-            .select(
-                "node",
-                (F.lit(base) + damping * F.col("in_mass")).alias("pr"),
-            )
-            .localCheckpoint(eager=False)
-        )
-    return ranks
 
 
 PR_FP_SCALE = 10**15  # fixed-point unit: 1.0 rank mass == 10^15 q-units
@@ -398,8 +233,15 @@ def pagerank_fixed_point(
     point. Overflow-safe: total mass ≤ 1e15, so ``17 * in_mass`` stays
     under 2^63.
 
-    Same two-keyed-shuffle shape per round as :func:`pagerank`; see it
-    for the pipeline rationale.
+    In a curation pipeline this is the link-graph quality prior. A fixed
+    iteration count, not convergence detection, keeps the job a static
+    DAG the oracle can unroll. Per round: one keyed join (edge × rank on
+    src) + one keyed groupBy (sum of contributions on dst), with a zero
+    row unioned per node so dangling-in-degree nodes stay in the
+    aggregate without a |V|⋈|V| join. Lineage is truncated per round; the
+    edge-degree join is precomputed once. Dangling nodes (outdeg 0)
+    contribute no mass; symmetrize the edge list when conservation
+    matters.
     """
     e = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
     nodes = (
@@ -416,7 +258,7 @@ def pagerank_fixed_point(
     base_q = (PR_FP_SCALE - PR_FP_SCALE * damping_num // damping_den) // n
     ranks = nodes.withColumn("pr_q", F.lit(PR_FP_SCALE // n).cast("long"))
     for _ in range(iters):
-        # One-aggregate round (see pagerank): the unioned 0 row is
+        # One-aggregate round: the unioned 0 row is
         # BIT-exact here — integer sums are fold-order independent and
         # sum(c ∪ {0}) == coalesce(sum(c), 0) identically.
         ranks = (

@@ -267,8 +267,8 @@ def semantic_dedup(
 
     1. Cluster: every row gets its nearest-centroid cell via
        :func:`ivf_assign` (map-only broadcast fold; the centroid table is
-       an offline k-means artifact — :func:`train_ivf_centroids` — or a
-       seeded sample standing in for one).
+       an offline k-means artifact, or a seeded corpus sample standing in
+       for one).
     2. Within-cell keep-first: a row is a semantic duplicate iff some
        LOWER-id row in the same cell has cosine >= ``tau`` (the same keep
        rule as exact/minhash dedup, so pipelines compose); ``dup_of`` is
@@ -344,77 +344,6 @@ def semantic_dedup(
     )
 
 
-def train_ivf_centroids(
-    corpus: DataFrame,
-    *,
-    k: int,
-    iters: int = 5,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-) -> DataFrame:
-    """Distributed Lloyd training for the IVF centroid table — the offline
-    half whose output :func:`ivf_assign` consumes (cuML/FAISS IVF-Flat
-    train split; the reference's cuVS neighbors path).
-
-    Deterministic init: the k corpus rows with the lowest seeded hash of
-    their id (a reproducible pseudo-random sample, no RNG state). Each
-    Lloyd round is (a) map-only cell assignment (broadcast centroids,
-    ivf_assign), then (b) per-dimension mean via posexplode +
-    groupBy(cell, dim) — both keyed shuffles of dim-amplified scalars,
-    never a vector-aggregate UDF; empty cells keep their previous
-    centroid. The result is a plain (cid, cvec) table: persist it with
-    ``.write.parquet`` and reload for serving — index build and query
-    are separate jobs, as at production scale.
-
-    Iterative job: each round materializes the new centroid table
-    (driver-collected; K rows by construction) — K centroids always fit
-    on the driver, that is what makes the serving side broadcastable.
-    """
-    from cudf_spark.functions.hashing import hash60
-
-    sess = corpus.sparkSession
-    init = (
-        corpus.select(F.col(id_col), F.col(vec_col))
-        .orderBy(hash60(F.col(id_col).cast("string"), seed=97), F.col(id_col))
-        .limit(k)
-        .select(F.col(vec_col).alias("cvec"))
-    )
-    # key 0..k-1 deterministically on the driver (k rows)
-    cents_rows = init.collect()
-    # hold the centroid list driver-side across rounds: re-collect()ing
-    # the DataFrame we just built from this list cost one redundant
-    # Spark job per Lloyd round (round-8 review)
-    cent_list: list[tuple[int, list]] = [
-        (i, list(r["cvec"])) for i, r in enumerate(cents_rows)
-    ]
-    centroids = sess.createDataFrame(cent_list, "cid int, cvec array<double>")
-    for _ in range(iters):
-        assigned = ivf_assign(corpus, centroids, vec_col=vec_col)
-        dims = assigned.select(
-            "cell", F.posexplode(_dvec(F.col(vec_col))).alias("dim", "x")
-        )
-        means = (
-            dims.groupBy("cell", "dim")
-            .agg(F.avg("x").alias("m"))
-            .groupBy("cell")
-            .agg(
-                F.array_sort(
-                    F.collect_list(F.struct(F.col("dim"), F.col("m")))
-                ).alias("dm")
-            )
-            .select(
-                F.col("cell").alias("cid"),
-                F.transform(F.col("dm"), lambda s: s["m"]).alias("cvec"),
-            )
-        )
-        new_rows = {r["cid"]: r["cvec"] for r in means.collect()}
-        cent_list = [
-            (cid, list(new_rows.get(cid, cvec))) for cid, cvec in cent_list
-        ]
-        centroids = sess.createDataFrame(cent_list, "cid int, cvec array<double>")
-    return centroids
-
-
 def l2sq(a: Column, b: Column) -> Column:
     """Left-to-right fold squared-L2 distance of two double arrays."""
     return F.aggregate(
@@ -454,11 +383,11 @@ def pq_codebook(
 ) -> DataFrame:
     """Deterministic product-quantization codebook: ``(m, c, cent)`` with
     ``n_subs × k`` rows — the ``k`` corpus vectors with the lowest seeded
-    hash of their id (a reproducible pseudo-random sample, same trick as
-    ``train_ivf_centroids`` init), each sliced into per-subspace
-    centroids. Swap in per-subspace Lloyd refinement for production
-    recall; sampling-init keeps the whole build one TakeOrdered + one
-    projection and — crucially for the oracle — replayable in SQL.
+    hash of their id (a reproducible pseudo-random sample), each sliced
+    into per-subspace centroids. Swap in per-subspace Lloyd refinement
+    for production recall; sampling-init keeps the whole build one
+    TakeOrdered + one projection and — crucially for the oracle —
+    replayable in SQL.
     """
     from pyspark.sql import Window
 

@@ -22,7 +22,7 @@ unbounded groups where even the sort is unwanted, the approx path is
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from cudf_spark.catalog import load
@@ -31,36 +31,6 @@ from cudf_spark.queries.text import SQL_TOKS
 from cudf_spark.queries.registry import register
 
 _Q = 0.37  # deliberately lands between indices for every mode
-
-
-def _modes(sorted_arr: Column, q: float) -> dict[str, Column]:
-    """All five interpolation modes over an already-sorted array column.
-
-    Array-based reference form of the index arithmetic (used by the
-    property suite and small-group callers); the registered query below
-    computes the same statistics without materializing the array.
-    """
-    n = F.size(sorted_arr)
-    pos = F.lit(q) * (n.cast("double") - 1)
-    # empty array: pos = -q makes lo = -1 and element_at(arr, 0) RAISES
-    # (Spark array indices start at 1) — clamp the indices and emit NULL
-    lo = F.greatest(F.floor(pos).cast("int"), F.lit(0))
-    hi = F.greatest(F.ceil(pos).cast("int"), F.lit(0))
-    near = F.greatest(
-        F.floor(pos + F.lit(0.5)).cast("int"), F.lit(0)
-    )  # explicit half-up in both engines
-    nonempty = n > 0
-    a_lo = F.when(nonempty, F.element_at(sorted_arr, lo + 1)).cast("double")
-    a_hi = F.when(nonempty, F.element_at(sorted_arr, hi + 1)).cast("double")
-    return {
-        "q_linear": a_lo + (a_hi - a_lo) * (pos - lo.cast("double")),
-        "q_lower": a_lo,
-        "q_higher": a_hi,
-        "q_midpoint": (a_lo + a_hi) / 2,
-        "q_nearest": F.when(
-            nonempty, F.element_at(sorted_arr, near + 1)
-        ).cast("double"),
-    }
 
 
 @register(

@@ -234,7 +234,7 @@ def text_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     WITH keyed AS (
         SELECT doc_id,
                md5(array_to_string(list_sort(list_distinct({SQL_TOKS})), ' ')) AS digest
-        FROM documents
+        FROM documents WHERE text IS NOT NULL
     )
     SELECT digest, count(*) AS n_dups, min(doc_id) AS canonical_id
     FROM keyed GROUP BY digest HAVING count(*) > 1
@@ -246,7 +246,10 @@ def text_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     "bag-of-words digest, which does collide.",
 )
 def dedup_exact_bow(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = load(spark, sf_dir, "documents")
+    # md5(NULL) is NULL and groupBy treats NULL keys as equal, so NULL-text
+    # documents would be reported as one duplicate group: a missing
+    # document must stay distinguishable from a duplicate one
+    d = load(spark, sf_dir, "documents").filter(F.col("text").isNotNull())
     digest = F.md5(
         F.array_join(F.array_sort(F.array_distinct(F.split(normalize_text(F.col("text")), " "))), " ")
     )

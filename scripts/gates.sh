@@ -1,10 +1,11 @@
 #!/usr/bin/env bash
 # Registry-wide gates — run before EVERY commit that registers a query.
 #
-# Two invariants rot silently when only the new query's file is tested:
+# Invariants that rot silently when only the new query's file is tested:
 #   * test_output_contract — every registry query's output schema obeys
 #     the driver-hash contract (no floats/arrays/maps, stable col names),
-#     and README's registry count tracks the registry;
+#     README's registry count tracks the registry, and every public
+#     operator has a caller outside tests;
 #   * test_scale_audit     — every registry query's physical plan passes
 #     the 100 TB linter (or carries a justified KNOWN_BOUNDED entry).
 #

@@ -68,32 +68,18 @@ def test_histogram_sketch_single_value_and_empty(spark):
         assert r.q_est == 7.0, q
 
 
-def test_quantile_modes_single_row_group(spark):
-    from cudf_spark.queries.aggregates2 import _modes
-
-    df = spark.createDataFrame([(3.5,)], "x double")
-    grouped = df.agg(F.sort_array(F.collect_list("x")).alias("a"))
-    m = _modes(F.col("a"), 0.37)
-    [row] = grouped.select(*[c.alias(k) for k, c in m.items()]).collect()
-    assert all(v == 3.5 for v in row.asDict().values())
-
-
 def test_ivf_train_persist_reload_query(spark, tmp_path):
-    """Lloyd training produces a persistable centroid table; with nprobe
+    """A seeded centroid sample persists as a plain table; with nprobe
     covering ALL cells, IVF search equals exact brute force - the
     correctness invariant that separates pruning error from bugs."""
-    from pyspark.sql import functions as F
-
     from cudf_spark.catalog import load
-    from cudf_spark.operators.similarity import (
-        ann_ivf_topk,
-        cosine_topk,
-        train_ivf_centroids,
-    )
+    from cudf_spark.operators.similarity import ann_ivf_topk, cosine_topk
     from tests.conftest import SF_DIR
 
     emb = load(spark, SF_DIR, "embeddings").limit(120)
-    cents = train_ivf_centroids(emb, k=4, iters=3)
+    cents = emb.filter(F.col("vec_id") % 31 == 3).select(
+        F.col("vec_id").alias("cid"), F.col("embedding").alias("cvec")
+    )
     assert cents.count() == 4
 
     # index persists as a plain table and reloads for serving
@@ -339,19 +325,6 @@ def test_avro_resolution_empty_file(spark, tmp_path):
     assert df.columns == ["id", "x"] and df.count() == 0
 
 
-def test_modes_empty_array_yields_nulls(spark):
-    """_modes on an empty sorted array must yield NULL quantiles, not
-    raise INVALID_ARRAY_INDEX (pos=-q made lo=-1 -> element_at(arr, 0))."""
-    from cudf_spark.queries.aggregates2 import _modes
-
-    df = spark.createDataFrame([([],), ([5.0],)], "a array<double>")
-    cols = _modes(F.col("a"), 0.37)
-    rows = df.select(*[c.alias(k) for k, c in cols.items()]).collect()
-    empty, one = rows
-    assert all(v is None for v in empty.asDict().values())
-    assert all(v == 5.0 for v in one.asDict().values())
-
-
 def test_quantile_modes_ignore_null_quantities(spark, monkeypatch):
     """NULL quantities are excluded (cudf/pandas semantics) — with them
     kept, Spark ranked NULLs FIRST while the oracle's list_sort put them
@@ -359,7 +332,7 @@ def test_quantile_modes_ignore_null_quantities(spark, monkeypatch):
     from cudf_spark.queries import aggregates2 as mod
 
     li = spark.createDataFrame(
-        [("A", None), ("A", 10.0), ("A", 20.0), ("B", None)],
+        [("A", None), ("A", 10.0), ("A", 20.0), ("B", None), ("C", 3.5)],
         "l_returnflag string, l_quantity double",
     )
     monkeypatch.setattr(mod, "load", lambda s, d, n: li)
@@ -367,6 +340,8 @@ def test_quantile_modes_ignore_null_quantities(spark, monkeypatch):
     # q=0.37 over [10, 20]: pos=0.37, lo=10, hi=20
     assert rows["A"].q_lower == 10.0 and rows["A"].q_higher == 20.0
     assert "B" not in rows  # all-NULL group drops on both engines
+    # a single-row group: every mode is that row's value
+    assert all(v == 3.5 for k, v in rows["C"].asDict().items() if k != "l_returnflag")
 
 
 def test_agg_stats_zero_variance_corr_is_null(spark, monkeypatch):

@@ -57,60 +57,21 @@ def test_convergence_round_count_boundary(spark):
         _cc(spark, edges, max_iter=3)
 
 
-def _cc_star(spark, edges, **kw):
-    from cudf_spark.operators.graphs import connected_components_star
-
-    df = spark.createDataFrame(edges, "src long, dst long")
-    return {
-        r.node: r.component
-        for r in connected_components_star(df, **kw).collect()
-    }
-
-
-def test_star_matches_propagation_on_planted_topologies(spark):
-    edges = [
-        (1, 2), (2, 3), (3, 1),
-        (10, 11), (10, 12), (10, 13),
-        (20, 21),
-    ]
-    assert _cc_star(spark, edges) == _cc(spark, edges)
-
-
-def test_star_matches_propagation_on_random_graphs(spark):
-    import random
-
-    rng = random.Random(42)
-    for trial in range(3):
-        n = 40
-        edges = [
-            (rng.randrange(n), rng.randrange(n)) for _ in range(50)
-        ]
-        edges = [(a, b) for a, b in edges if a != b]
-        assert _cc_star(spark, edges) == _cc(spark, edges, max_iter=60), trial
-
-
-def test_star_converges_on_long_chain_in_log_rounds(spark):
-    # a 60-node path: propagation needs 59 rounds (raises at max_iter=25);
-    # the star algorithm contracts it within its default cap
-    edges = [(i, i + 1) for i in range(60)]
-    got = _cc_star(spark, edges)
-    assert got == {i: 0 for i in range(61)}
-
-
-def test_star_direction_irrelevant(spark):
-    assert _cc_star(spark, [(7, 3), (3, 9), (9, 5)]) == {3: 3, 5: 3, 7: 3, 9: 3}
-
-
 def test_pagerank_matches_pure_python(spark):
-    """5-iteration PageRank on a small directed graph equals a plain
-    dict-based power iteration (independent implementation), including a
-    node with no in-links (gets base rank only — the unioned zero-row
-    path that replaced the per-round left join)."""
-    from cudf_spark.operators.graphs import pagerank
+    """5-iteration fixed-point PageRank on a small directed graph tracks a
+    plain dict-based float power iteration (independent implementation)
+    within quantization error (truncating div loses < deg·1e-15 per node
+    per round), including a node with no in-links (gets base rank only —
+    the unioned zero-row path), and is bit-stable across
+    repartitionings."""
+    from cudf_spark.operators.graphs import pagerank_fixed_point
 
     edges = [("a", "b"), ("a", "c"), ("b", "c"), ("c", "a"), ("d", "c")]
     df = spark.createDataFrame(edges, "src string, dst string")
-    got = {r["node"]: r["pr"] for r in pagerank(df, damping=0.85, iters=5).collect()}
+    got = {
+        r["node"]: r["pr_q"] / 1e15
+        for r in pagerank_fixed_point(df, iters=5).collect()
+    }
 
     nodes = sorted({n for e in edges for n in e})
     outdeg = {n: sum(1 for s, _ in edges if s == n) for n in nodes}
@@ -123,26 +84,7 @@ def test_pagerank_matches_pure_python(spark):
         pr = nxt
     assert set(got) == set(nodes)
     for n in nodes:
-        assert abs(got[n] - pr[n]) < 1e-12, (n, got[n], pr[n])
-
-
-def test_pagerank_fixed_point_tracks_float(spark):
-    """The scaled-integer iteration stays within quantization error of
-    the float PageRank (truncating div loses < deg·1e-15 per node per
-    round), and is bit-stable across repartitionings — the property the
-    float version cannot give."""
-    from cudf_spark.operators.graphs import pagerank, pagerank_fixed_point
-
-    edges = [("a", "b"), ("a", "c"), ("b", "c"), ("c", "a"), ("d", "c"), ("c", "d")]
-    df = spark.createDataFrame(edges, "src string, dst string")
-    fl = {r["node"]: r["pr"] for r in pagerank(df, damping=0.85, iters=5).collect()}
-    fp = {
-        r["node"]: r["pr_q"] / 1e15
-        for r in pagerank_fixed_point(df, iters=5).collect()
-    }
-    assert set(fl) == set(fp)
-    for n in fl:
-        assert abs(fl[n] - fp[n]) < 1e-9, (n, fl[n], fp[n])
+        assert abs(got[n] - pr[n]) < 1e-9, (n, got[n], pr[n])
     # determinism under a different partitioning: identical pr_q bits
     fp2 = {
         r["node"]: r["pr_q"]

@@ -14,31 +14,6 @@ from pyspark.sql import functions as F
 from tests.conftest import SF_DIR
 
 
-def test_multimodal_decode_meta(spark):
-    from cudf_spark.multimodal import ASSET_SCHEMA, decode_image_meta, fake_image_bytes, filter_valid_images
-
-    rows = [
-        (1, "image", fake_image_bytes(64, 48, fill=7), {"src": "cam0"}),
-        (2, "image", fake_image_bytes(8, 8), {}),
-        (3, "image", b"NOTANIMAGE", {}),
-        (4, "image", None, {}),
-    ]
-    assets = spark.createDataFrame(rows, schema=ASSET_SCHEMA)
-    meta = {r["asset_id"]: r for r in decode_image_meta(assets).collect()}
-    assert (meta[1]["width"], meta[1]["height"], meta[1]["valid"]) == (64, 48, True)
-    assert meta[2]["n_bytes"] == 12 + 64
-    assert meta[3]["valid"] is False and meta[4]["valid"] is False
-    assert {r["asset_id"] for r in filter_valid_images(assets).collect()} == {1, 2}
-
-
-def test_multimodal_pixel_decode_is_stubbed(spark):
-    from cudf_spark.multimodal import ASSET_SCHEMA, decode_image_pixels
-
-    assets = spark.createDataFrame([], schema=ASSET_SCHEMA)
-    with pytest.raises(NotImplementedError):
-        decode_image_pixels(assets)
-
-
 @pytest.mark.parametrize("fmt", ["parquet", "orc", "csv", "json"])
 def test_source_roundtrip(spark, fmt):
     from cudf_spark.catalog import load

@@ -688,14 +688,14 @@ def test_bpe_train_matches_apply_normalization(spark):
     assert ("t", "s") not in pairs
 
 
-def test_similarity_query_guards_and_null_dedup(spark):
-    """Round-8 operator sweep: single-query ANN operators must reject
-    multi-row queries loudly (silent interleaved garbage before), and
-    exact dedup must not collapse NULL-text docs into one group."""
+def test_similarity_query_guards_and_null_dedup(spark, monkeypatch):
+    """Single-query ANN operators must reject multi-row queries loudly
+    (silent interleaved garbage before), and the exact-dedup query must
+    not report NULL-text docs as one duplicate group."""
     import pytest
 
-    from cudf_spark.operators.dedup import exact_dedup_groups
     from cudf_spark.operators.similarity import cosine_topk
+    from cudf_spark.queries import text as mod
 
     e = spark.createDataFrame(
         [(1, [1.0, 0.0]), (2, [0.0, 1.0]), (3, [1.0, 1.0])],
@@ -708,12 +708,27 @@ def test_similarity_query_guards_and_null_dedup(spark):
     assert cosine_topk(e, e.limit(0), k=2).count() == 0
 
     docs = spark.createDataFrame(
-        [(1, None), (2, None), (3, "same"), (4, "same")],
-        "id long, text string",
+        [(1, None), (2, None), (3, "same words"), (4, "words same")],
+        "doc_id long, text string",
     )
-    groups = exact_dedup_groups(docs, "id", "text").collect()
+    monkeypatch.setattr(mod, "load", lambda s, d, n: docs)
+    groups = mod.dedup_exact_bow(spark, "x").collect()
     assert len(groups) == 1  # only the real duplicate pair groups
     assert groups[0].n_dups == 2 and groups[0].canonical_id == 3
+
+    import duckdb
+
+    from cudf_spark.queries.registry import REGISTRY
+
+    con = duckdb.connect()
+    con.execute(
+        "CREATE TABLE documents AS SELECT * FROM (VALUES "
+        "(1, NULL), (2, NULL), (3, 'same words'), (4, 'words same')) "
+        "t(doc_id, text)"
+    )
+    oracle = con.execute(REGISTRY["dedup_exact_bow"].oracle).fetchall()
+    con.close()
+    assert [(n, c) for _, n, c in oracle] == [(2, 3)]
 
 
 def test_ewma_segmented_equi_width_layout_stable(spark):

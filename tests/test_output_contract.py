@@ -16,6 +16,7 @@ bounded tables (centroids, BPE merges) during plan construction.
 
 from __future__ import annotations
 
+import ast
 import re
 from pathlib import Path
 
@@ -52,3 +53,70 @@ def test_readme_registry_count_matches():
     m = re.search(r"registry: (\d+) named queries, (\d+) paired", text)
     assert m, "README layout line about the registry is missing"
     assert (int(m.group(1)), int(m.group(2))) == (len(REGISTRY), oracle_backed)
+
+
+# Public operators that no other cudf_spark code calls, each the only
+# implementation of its SURVEY capability (so there is no second path to
+# fold it into).
+UNCALLED_OK = {
+    "bloom_merge": "merges persisted Bloom sketches; the only sketch-merge path for Bloom state",
+    "cms_merge": "merges persisted count-min sketches; the only sketch-merge path for CMS state",
+    "bitmap_merge": "merges persisted bitmap sketches; the only sketch-merge path for bitmap state",
+    "wordpiece_tokenize_udf": "the only WordPiece tokenizer (nvtext/wordpiece_tokenize.hpp)",
+    "stream_dedup": "the only streaming dedup (watermarked dropDuplicates)",
+    "kafka_micro_batch_reader": "the only Kafka source (custreamz kafka.py:83)",
+}
+
+
+def _names_used(node: ast.AST) -> set[str]:
+    used = set()
+    for n in ast.walk(node):
+        if isinstance(n, ast.Name):
+            used.add(n.id)
+        elif isinstance(n, ast.Attribute):
+            used.add(n.attr)
+        elif isinstance(n, ast.ImportFrom):
+            used.update(a.name for a in n.names)
+    return used
+
+
+def test_every_public_operator_has_a_caller():
+    """A public top-level function in operators/, functions/, streaming/,
+    sources/ or multimodal.py must be referenced by other cudf_spark code
+    (AST names, attributes and ``from`` imports; not strings, not its own
+    body, not ``__init__`` re-exports). An operator that only its tests
+    call is a second path no query runs."""
+    pkg = Path(__file__).resolve().parent.parent / "cudf_spark"
+    scope = {pkg / "multimodal.py"} | {
+        f
+        for sub in ("operators", "functions", "streaming", "sources")
+        for f in (pkg / sub).glob("*.py")
+    }
+    public: dict[str, Path] = {}
+    # (file, enclosing top-level function or None) -> names it references
+    refs: dict[tuple[Path, str | None], set[str]] = {}
+    for f in sorted(pkg.rglob("*.py")):
+        if f.name == "__init__.py":
+            continue
+        tree = ast.parse(f.read_text(), filename=str(f))
+        for node in tree.body:
+            is_fn = isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef))
+            owner = node.name if is_fn else None
+            refs.setdefault((f, owner), set()).update(_names_used(node))
+            if is_fn and f in scope and not node.name.startswith("_"):
+                public[node.name] = f
+    uncalled = {
+        name
+        for name, f in public.items()
+        if not any(
+            name in used for (rf, owner), used in refs.items() if (rf, owner) != (f, name)
+        )
+    }
+    extra = sorted(uncalled - set(UNCALLED_OK))
+    assert not extra, (
+        f"public operators with no caller outside tests: {extra}; delete "
+        "them, or allowlist one that is the only implementation of its "
+        "capability"
+    )
+    stale = sorted(set(UNCALLED_OK) - uncalled)
+    assert not stale, f"UNCALLED_OK entries that now have a caller: {stale}"

@@ -70,9 +70,9 @@ def test_hash60_matches_duckdb(spark, duck, vals):
 @SLOW
 @given(vals=float_lists, q=st.floats(min_value=0.0, max_value=1.0))
 def test_quantile_modes_match_numpy(spark, vals, q):
-    """The five interpolation-mode shims follow the direct ``pos = q*(n-1)``
-    index convention (cudf quantiles.hpp:50 — cudf's sort-based kernel
-    computes exactly this product in double).
+    """agg_quantile_modes' five interpolation modes follow the direct
+    ``pos = q*(n-1)`` index convention (cudf quantiles.hpp:50 — cudf's
+    sort-based kernel computes exactly this product in double).
 
     numpy's ``np.percentile`` round-trips the quantile through percent
     (``q*100/100``), which can land an ULP away from q and flip lo/hi on
@@ -82,16 +82,21 @@ def test_quantile_modes_match_numpy(spark, vals, q):
     when both conventions agree on the integer indices.
     """
     import math
+    from unittest import mock
 
     import numpy as np
-    from pyspark.sql import functions as F
 
-    from cudf_spark.queries.aggregates2 import _modes
+    from cudf_spark.queries import aggregates2 as mod
 
-    df = spark.createDataFrame([(float(v),) for v in vals], "x double")
-    grouped = df.agg(F.sort_array(F.collect_list("x")).alias("a"))
-    m = _modes(F.col("a"), q)
-    row = grouped.select(*[c.alias(k) for k, c in m.items()]).collect()[0]
+    li = spark.createDataFrame(
+        [("A", float(v)) for v in vals], "l_returnflag string, l_quantity double"
+    )
+    # the query's rank-targeted selection at an arbitrary q; its output is
+    # rounded to 4 decimals, hence the 1e-4 tolerance below
+    with mock.patch.object(mod, "load", lambda s, d, n: li), mock.patch.object(
+        mod, "_Q", q
+    ):
+        [row] = mod.agg_quantile_modes(spark, "x").collect()
 
     arr = sorted(vals)
     pos = q * (len(arr) - 1)
@@ -106,7 +111,7 @@ def test_quantile_modes_match_numpy(spark, vals, q):
         "q_nearest": arr[int(math.floor(pos + 0.5))],
     }
     for mode, e in expect.items():
-        assert math.isclose(row[mode], float(e), rel_tol=1e-12, abs_tol=1e-9), (
+        assert math.isclose(row[mode], float(e), rel_tol=1e-12, abs_tol=1e-4), (
             mode,
             q,
         )
@@ -123,7 +128,7 @@ def test_quantile_modes_match_numpy(spark, vals, q):
             ("q_midpoint", "midpoint"),
         ]:
             np_e = float(np.percentile(np.array(arr), q * 100, method=np_method))
-            assert math.isclose(row[mode], np_e, rel_tol=1e-12, abs_tol=1e-9), (
+            assert math.isclose(row[mode], np_e, rel_tol=1e-12, abs_tol=1e-4), (
                 mode,
                 q,
             )
