@@ -68,6 +68,20 @@ def test_histogram_sketch_single_value_and_empty(spark):
         assert r.q_est == 7.0, q
 
 
+def test_quantile_modes_single_row_group(spark, monkeypatch):
+    """A single-row group: every quantile mode is that row's value."""
+    from cudf_spark.queries import aggregates2 as mod
+
+    li = spark.createDataFrame(
+        [("A", 10.0), ("A", 20.0), ("C", 3.5)],
+        "l_returnflag string, l_quantity double",
+    )
+    monkeypatch.setattr(mod, "load", lambda s, d, n: li)
+    rows = {r.l_returnflag: r for r in mod.agg_quantile_modes(spark, "x").collect()}
+    modes = {k: v for k, v in rows["C"].asDict().items() if k != "l_returnflag"}
+    assert modes and all(v == 3.5 for v in modes.values()), modes
+
+
 def test_ivf_train_persist_reload_query(spark, tmp_path):
     """A seeded centroid sample persists as a plain table; with nprobe
     covering ALL cells, IVF search equals exact brute force - the
@@ -332,7 +346,7 @@ def test_quantile_modes_ignore_null_quantities(spark, monkeypatch):
     from cudf_spark.queries import aggregates2 as mod
 
     li = spark.createDataFrame(
-        [("A", None), ("A", 10.0), ("A", 20.0), ("B", None), ("C", 3.5)],
+        [("A", None), ("A", 10.0), ("A", 20.0), ("B", None)],
         "l_returnflag string, l_quantity double",
     )
     monkeypatch.setattr(mod, "load", lambda s, d, n: li)
@@ -340,8 +354,6 @@ def test_quantile_modes_ignore_null_quantities(spark, monkeypatch):
     # q=0.37 over [10, 20]: pos=0.37, lo=10, hi=20
     assert rows["A"].q_lower == 10.0 and rows["A"].q_higher == 20.0
     assert "B" not in rows  # all-NULL group drops on both engines
-    # a single-row group: every mode is that row's value
-    assert all(v == 3.5 for k, v in rows["C"].asDict().items() if k != "l_returnflag")
 
 
 def test_agg_stats_zero_variance_corr_is_null(spark, monkeypatch):

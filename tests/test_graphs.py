@@ -57,42 +57,54 @@ def test_convergence_round_count_boundary(spark):
         _cc(spark, edges, max_iter=3)
 
 
-def test_pagerank_matches_pure_python(spark):
-    """5-iteration fixed-point PageRank on a small directed graph tracks a
-    plain dict-based float power iteration (independent implementation)
-    within quantization error (truncating div loses < deg·1e-15 per node
-    per round), including a node with no in-links (gets base rank only —
-    the unioned zero-row path), and is bit-stable across
-    repartitionings."""
-    from cudf_spark.operators.graphs import pagerank_fixed_point
-
-    edges = [("a", "b"), ("a", "c"), ("b", "c"), ("c", "a"), ("d", "c")]
-    df = spark.createDataFrame(edges, "src string, dst string")
-    got = {
-        r["node"]: r["pr_q"] / 1e15
-        for r in pagerank_fixed_point(df, iters=5).collect()
-    }
-
+def _float_pagerank(edges, iters, damping=0.85):
+    """Plain dict-based float power iteration (independent implementation)."""
     nodes = sorted({n for e in edges for n in e})
     outdeg = {n: sum(1 for s, _ in edges if s == n) for n in nodes}
     pr = {n: 1.0 / len(nodes) for n in nodes}
-    for _ in range(5):
+    for _ in range(iters):
         nxt = {}
         for n in nodes:
             in_mass = sum(pr[s] / outdeg[s] for s, d in edges if d == n)
-            nxt[n] = 0.15 / len(nodes) + 0.85 * in_mass
+            nxt[n] = (1 - damping) / len(nodes) + damping * in_mass
         pr = nxt
-    assert set(got) == set(nodes)
-    for n in nodes:
+    return pr
+
+
+def _pr_q(df, iters=5):
+    from cudf_spark.operators.graphs import pagerank_fixed_point
+
+    return {r["node"]: r["pr_q"] for r in pagerank_fixed_point(df, iters=iters).collect()}
+
+
+def test_pagerank_matches_pure_python(spark):
+    """5-iteration fixed-point PageRank on a small directed graph equals a
+    plain float power iteration within quantization error, including a
+    node with no in-links (gets base rank only — the unioned zero-row
+    path that replaced the per-round left join)."""
+    edges = [("a", "b"), ("a", "c"), ("b", "c"), ("c", "a"), ("d", "c")]
+    df = spark.createDataFrame(edges, "src string, dst string")
+    got = {n: q / 1e15 for n, q in _pr_q(df).items()}
+    pr = _float_pagerank(edges, iters=5)
+    assert set(got) == set(pr)
+    for n in pr:
         assert abs(got[n] - pr[n]) < 1e-9, (n, got[n], pr[n])
+
+
+def test_pagerank_fixed_point_tracks_float(spark):
+    """The scaled-integer iteration stays within quantization error of a
+    float PageRank (truncating div loses < deg·1e-15 per node per round),
+    and is bit-stable across repartitionings — the property a float
+    iteration cannot give."""
+    edges = [("a", "b"), ("a", "c"), ("b", "c"), ("c", "a"), ("d", "c"), ("c", "d")]
+    df = spark.createDataFrame(edges, "src string, dst string")
+    fl = _float_pagerank(edges, iters=5)
+    fp = _pr_q(df)
+    assert set(fl) == set(fp)
+    for n in fl:
+        assert abs(fl[n] - fp[n] / 1e15) < 1e-9, (n, fl[n], fp[n])
     # determinism under a different partitioning: identical pr_q bits
-    fp2 = {
-        r["node"]: r["pr_q"]
-        for r in pagerank_fixed_point(df.repartition(7), iters=5).collect()
-    }
-    assert fp2 == {
-        r["node"]: r["pr_q"] for r in pagerank_fixed_point(df, iters=5).collect()
-    }
+    assert _pr_q(df.repartition(7)) == fp
 
 
 def test_pagerank_fixed_point_empty(spark):
