@@ -3,8 +3,8 @@
 Assets are opaque ``binary`` columns with typed metadata — the Spark-native
 way to carry media through a 100 TB training-data pipeline (partition by
 asset id / shard, never collect). Decode / feature-extract / resize /
-frame-sample run as Arrow-batched ``mapInPandas`` operators so codec work
-is vectorized per batch and scales with partitions.
+frame-sample are per-row functions run by :func:`map_rows`, the one
+Arrow-batched ``mapInPandas`` loop, so codec work scales with partitions.
 
 The compressed-format codecs (PIL/ffmpeg/soundfile) are not dependencies,
 so image payloads use a deterministic fake format (magic ``FIMG`` +
@@ -24,21 +24,49 @@ remain behind the seam.
 from __future__ import annotations
 
 import struct
-from collections.abc import Iterator
+from collections.abc import Callable, Iterable, Iterator
 
 from pyspark.sql import DataFrame
-from pyspark.sql import types as T
 
 MAGIC = b"FIMG"
+VIDEO_MAGIC = b"FVID"
+AUDIO_MAGIC = b"FAUD"
 
-ASSET_SCHEMA = T.StructType(
-    [
-        T.StructField("asset_id", T.LongType(), False),
-        T.StructField("kind", T.StringType(), False),  # image | audio | video
-        T.StructField("data", T.BinaryType(), True),
-        T.StructField("meta", T.MapType(T.StringType(), T.StringType()), True),
-    ]
-)
+
+def map_rows(df: DataFrame, schema: str, fn: Callable[..., Iterable[tuple]]) -> DataFrame:
+    """Run ``fn`` over every row of ``df`` in one Arrow-batched
+    ``mapInPandas`` pass. ``fn`` takes one row's values (in ``df``'s column
+    order) and returns that row's output tuples — zero, one or many — laid
+    out as the flat DDL ``schema``, which also names the output columns."""
+    names = [field.split()[0] for field in schema.split(",")]
+
+    def batches(it: Iterator) -> Iterator:
+        import pandas as pd
+
+        for pdf in it:
+            rows = [out for row in pdf.itertuples(index=False, name=None) for out in fn(*row)]
+            yield pd.DataFrame(rows, columns=names)
+
+    return df.mapInPandas(batches, schema=schema)
+
+
+def encode_assets(docs: DataFrame, make: Callable[..., bytes]) -> DataFrame:
+    """``(asset_id, data)`` frame of synthesized payloads: each row of
+    ``docs`` (its id column first) becomes ``(id, make(*row))``."""
+    return map_rows(docs, "asset_id long, data binary", lambda *row: [(row[0], make(*row))])
+
+
+def _map_assets(
+    assets: DataFrame, schema: str, fn: Callable[[int, bytes], Iterable[tuple]]
+) -> DataFrame:
+    """:func:`map_rows` over ``assets``' ``(asset_id, data)``; a NULL
+    payload reaches ``fn`` as ``b""``, so each kernel's validity rule
+    covers it."""
+    return map_rows(
+        assets.select("asset_id", "data"),
+        schema,
+        lambda aid, data: fn(aid, bytes(data) if data is not None else b""),
+    )
 
 
 def fake_image_gradient(width: int, height: int, base: int = 0) -> bytes:
@@ -56,9 +84,9 @@ IMAGE_FEATURES_SCHEMA = (
 
 def _parse_fimg(b: bytes):
     """(w, h, px uint8 ndarray) for a well-formed FIMG payload, else
-    None. ONE header validation for the image kernels (image_features,
-    image_ahash) — the round-8 review found it copy-pasted with
-    drift-prone variations."""
+    None. The one header validation of the image kernels
+    (image_features, image_ahash); a real codec replaces the
+    ``frombuffer`` line."""
     import numpy as np
 
     if b[:4] != MAGIC or len(b) < 12:
@@ -70,15 +98,28 @@ def _parse_fimg(b: bytes):
     return w, h, px
 
 
+def _downsample8(w: int, h: int, px):
+    """8x8 nearest-neighbour downsample of a parsed FIMG raster (integer
+    index math — ``(r*h)//8`` — so the result is engine-reproducible)."""
+    import numpy as np
+
+    idx = np.arange(8)
+    return px.reshape(h, w)[(idx * h) // 8][:, (idx * w) // 8]
+
+
 def _parse_fvid(b: bytes):
-    """(n_frames, w, h) for a well-formed FVID payload (all frames
-    present, nonzero area), else None."""
+    """(n_frames, w, h, frames uint8 ndarray of shape (n_frames, w*h)) for
+    a well-formed FVID payload (all frames present, nonzero area), else
+    None. ffmpeg would replace the ``frombuffer`` line."""
+    import numpy as np
+
     if b[:4] != VIDEO_MAGIC or len(b) < 16:
         return None
     n, w, h = struct.unpack(">III", b[4:16])
     if w * h == 0 or len(b) < 16 + n * w * h:
         return None
-    return n, w, h
+    frames = np.frombuffer(b, dtype=np.uint8, offset=16, count=n * w * h)
+    return n, w, h, frames.reshape(n, w * h)
 
 
 def _parse_faud(b: bytes):
@@ -94,51 +135,27 @@ def _parse_faud(b: bytes):
     return rate, np.frombuffer(b, dtype=">i2", offset=12, count=n).astype(np.int64)
 
 
-
-def image_features(assets: DataFrame, *, resize_to: tuple[int, int] = (8, 8)) -> DataFrame:
+def image_features(assets: DataFrame) -> DataFrame:
     """Decode + feature-extract + nearest-neighbour resize in ONE Arrow pass.
 
-    Real kernels over the fake raster: mean intensity, and the mean of an
-    ``resize_to`` NN-downsample (integer index math — ``(r*h)//rh`` — so the
-    result is engine-reproducible). Means are exact-int sums divided once in
-    IEEE double, so values hash-match a SQL oracle bit-for-bit. Malformed
-    payloads → ``valid=false`` rows, never task failures. A real codec swaps
-    into the ``frombuffer`` line; everything else (schema, batching,
-    partition parallelism) is production plumbing.
+    Real kernels over the fake raster: mean intensity, and the mean of its
+    8x8 NN-downsample. Means are exact-int sums divided once in IEEE
+    double, so values hash-match a SQL oracle bit-for-bit. Malformed
+    payloads → ``valid=false`` rows, never task failures. A real codec
+    swaps into the ``frombuffer`` line of ``_parse_fimg``; everything else
+    (schema, batching, partition parallelism) is production plumbing.
     """
-    rw, rh = resize_to
 
-    def batches(it: Iterator) -> Iterator:
-        import numpy as np
-        import pandas as pd
+    def row(aid, b):
+        parsed = _parse_fimg(b)
+        if parsed is None:
+            return [(aid, 0, 0, len(b), 0.0, 0.0, False)]
+        w, h, px = parsed
+        mean_px = int(px.sum(dtype="int64")) / float(w * h)
+        rmean = int(_downsample8(w, h, px).sum(dtype="int64")) / 64.0
+        return [(aid, w, h, len(b), mean_px, rmean, True)]
 
-        for pdf in it:
-            rows = []
-            for aid, data in zip(pdf["asset_id"], pdf["data"]):
-                b = bytes(data) if data is not None else b""
-                parsed = _parse_fimg(b)
-                ok = parsed is not None
-                w = h = 0
-                mean_px = rmean = 0.0
-                if ok:
-                    w, h, px = parsed
-                    arr = px.reshape(h, w)
-                    mean_px = int(px.sum(dtype=np.int64)) / float(w * h)
-                    resized = arr[(np.arange(rh) * h) // rh][:, (np.arange(rw) * w) // rw]
-                    rmean = int(resized.sum(dtype=np.int64)) / float(rw * rh)
-                rows.append((aid, w, h, len(b), mean_px, rmean, bool(ok)))
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "asset_id", "width", "height", "n_bytes",
-                    "mean_px", "resized_mean_px", "valid",
-                ],
-            )
-
-    return assets.mapInPandas(batches, schema=IMAGE_FEATURES_SCHEMA)
-
-
-VIDEO_MAGIC = b"FVID"
+    return _map_assets(assets, IMAGE_FEATURES_SCHEMA, row)
 
 
 def fake_video_bytes(width: int, height: int, n_frames: int, base: int = 0) -> bytes:
@@ -155,11 +172,12 @@ FRAME_SAMPLE_SCHEMA = "asset_id long, frame_idx int, width int, height int, fram
 
 def frame_sample(assets: DataFrame, every_n: int = 10) -> DataFrame:
     """Sample every ``every_n``-th frame of each fake video — a row-exploding
-    mapInPandas (1 video in, ceil(n_frames/every_n) frame rows out).
+    pass (1 video in, ceil(n_frames/every_n) frame rows out).
 
     The Arrow batch shape, frame indexing, and per-frame reduction are the
-    real pipeline; ffmpeg would replace the ``frombuffer`` slice. Frame means
-    are exact-int sums / IEEE double divide — SQL-oracle reproducible.
+    real pipeline; ffmpeg would replace the ``frombuffer`` line of
+    ``_parse_fvid``. Frame means are exact-int sums / IEEE double divide —
+    SQL-oracle reproducible.
 
     Malformed/truncated payloads yield ZERO frame rows (there is no
     per-frame place for a valid flag); this operator's contract is
@@ -171,27 +189,32 @@ def frame_sample(assets: DataFrame, every_n: int = 10) -> DataFrame:
         # silently emit nothing — validate driver-side like band_size
         raise ValueError(f"frame_sample: every_n ({every_n}) must be >= 1")
 
-    def batches(it: Iterator) -> Iterator:
-        import numpy as np
-        import pandas as pd
+    def row(aid, b):
+        parsed = _parse_fvid(b)
+        if parsed is None:
+            return []
+        n, w, h, frames = parsed
+        sums = frames[::every_n].sum(axis=1, dtype="int64").tolist()
+        return [(aid, k, w, h, s / float(w * h)) for k, s in zip(range(0, n, every_n), sums)]
 
-        for pdf in it:
-            rows = []
-            for aid, data in zip(pdf["asset_id"], pdf["data"]):
-                b = bytes(data) if data is not None else b""
-                parsed = _parse_fvid(b)
-                if parsed is None:
-                    continue
-                n, w, h = parsed
-                fsize = w * h
-                for k in range(0, n, every_n):
-                    px = np.frombuffer(b[16 + k * fsize : 16 + (k + 1) * fsize], dtype=np.uint8)
-                    rows.append((aid, k, w, h, int(px.sum(dtype=np.int64)) / float(fsize)))
-            yield pd.DataFrame(
-                rows, columns=["asset_id", "frame_idx", "width", "height", "frame_mean"]
-            )
+    return _map_assets(assets, FRAME_SAMPLE_SCHEMA, row)
 
-    return assets.mapInPandas(batches, schema=FRAME_SAMPLE_SCHEMA)
+
+def video_signature(assets: DataFrame) -> DataFrame:
+    """One ``raw_sig`` string per fake video: ``"{w}x{h}:"`` then every
+    frame's exact int64 pixel sum, ``|``-joined in frame order — the
+    per-frame feature a perceptual hash would replace. Malformed/truncated
+    payloads yield ZERO rows, as in :func:`frame_sample`."""
+
+    def row(aid, b):
+        parsed = _parse_fvid(b)
+        if parsed is None:
+            return []
+        _, w, h, frames = parsed
+        sums = frames.sum(axis=1, dtype="int64").tolist()
+        return [(aid, f"{w}x{h}:" + "|".join(map(str, sums)))]
+
+    return _map_assets(assets, "asset_id long, raw_sig string", row)
 
 
 def fake_image_texture(width: int, height: int, mult: int, base: int = 0) -> bytes:
@@ -213,53 +236,34 @@ IMAGE_AHASH_SCHEMA = (
 
 def image_ahash(assets: DataFrame) -> DataFrame:
     """Perceptual average-hash (aHash) per image in ONE Arrow pass: decode
-    the fake raster, 8x8 nearest-neighbour downsample (same integer index
-    math as :func:`image_features`), then bit k = 1 iff ``64*px_k > sum``
-    (exact integer compare — no float mean, so engines can't disagree).
+    the fake raster, 8x8 nearest-neighbour downsample (the same
+    ``_downsample8`` as :func:`image_features`), then bit k = 1 iff
+    ``64*px_k > sum`` (exact integer compare — no float mean, so engines
+    can't disagree). Images under 8x8 are ``valid=false``.
 
     Returns the hash as a signed int64 (two's-complement wrap of the 64-bit
     pattern) for JVM-side ``bit_count(a ^ b)`` Hamming distance, a hex
     string for human-auditable output, and the four 16-bit bands used by
     the multi-index Hamming join (Manku et al., WWW'07 — a hash pair within
     Hamming distance 3 must agree exactly on at least one of 4 bands, by
-    pigeonhole). Real-codec swap point: the ``frombuffer`` line.
+    pigeonhole). Real-codec swap point: the ``frombuffer`` line of
+    ``_parse_fimg``.
     """
 
-    def batches(it: Iterator) -> Iterator:
-        import numpy as np
-        import pandas as pd
+    def row(aid, b):
+        parsed = _parse_fimg(b)
+        if parsed is None or parsed[0] < 8 or parsed[1] < 8:
+            return [(aid, 0, "0" * 16, 0, 0, 0, 0, False)]
+        r = _downsample8(*parsed).reshape(-1)
+        s = int(r.sum(dtype="int64"))
+        bits = "".join("1" if 64 * int(v) > s else "0" for v in r)
+        val = int(bits, 2)
+        signed = val - (1 << 64) if val >= (1 << 63) else val
+        bands = [int(bits[16 * j : 16 * j + 16], 2) for j in range(4)]
+        return [(aid, signed, format(val, "016x"), *bands, True)]
 
-        for pdf in it:
-            rows = []
-            for aid, data in zip(pdf["asset_id"], pdf["data"]):
-                b = bytes(data) if data is not None else b""
-                parsed = _parse_fimg(b)
-                ok = parsed is not None and parsed[0] >= 8 and parsed[1] >= 8
-                if ok:
-                    w, h, px = parsed
-                if not ok:
-                    rows.append((aid, 0, "0" * 16, 0, 0, 0, 0, False))
-                    continue
-                arr = px.reshape(h, w)
-                r = arr[(np.arange(8) * h) // 8][:, (np.arange(8) * w) // 8].reshape(-1)
-                s = int(r.sum(dtype=np.int64))
-                bits = "".join("1" if 64 * int(v) > s else "0" for v in r)
-                val = int(bits, 2)
-                signed = val - (1 << 64) if val >= (1 << 63) else val
-                bands = [int(bits[16 * j : 16 * j + 16], 2) for j in range(4)]
-                rows.append((aid, signed, format(val, "016x"), *bands, True))
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "asset_id", "ahash", "ahash_hex",
-                    "band0", "band1", "band2", "band3", "valid",
-                ],
-            )
+    return _map_assets(assets, IMAGE_AHASH_SCHEMA, row)
 
-    return assets.mapInPandas(batches, schema=IMAGE_AHASH_SCHEMA)
-
-
-AUDIO_MAGIC = b"FAUD"
 
 AUDIO_FEATURE_SCHEMA = (
     "asset_id long, sample_rate int, n_samples int, duration_ms long, "
@@ -277,60 +281,48 @@ def fake_audio_bytes(sample_rate: int, n_samples: int, base: int = 0) -> bytes:
     return AUDIO_MAGIC + struct.pack(">II", sample_rate, n_samples) + samples
 
 
+def encode_fake_audio(docs: DataFrame) -> DataFrame:
+    """``(doc_id, n_chars)`` rows -> ``(asset_id, data)`` fake PCM clips;
+    the ONE place the clip parameters (rate 8000, n=nc%500+50,
+    base=did%4096) live — the audio queries' oracles replay these exact
+    values, so they must never fork."""
+    return encode_assets(docs, lambda did, nc: fake_audio_bytes(8000, nc % 500 + 50, did % 4096))
+
+
 def audio_features(assets: DataFrame) -> DataFrame:
     """Decode fake-PCM audio and extract waveform features in one Arrow
     pass: duration, peak amplitude, RMS energy, zero-crossing count.
 
-    The codec is the documented fake (no audio libs in this container);
+    The codec is the documented fake (no audio library is a dependency);
     the byte parsing (header unpack + big-endian i16 ``frombuffer``), the
     Arrow batch shape, and the feature arithmetic are real — a real codec
-    drops in by replacing the ``frombuffer`` line with a decoder call.
+    drops in by replacing the ``frombuffer`` line of ``_parse_faud`` with
+    a decoder call.
 
     Integer-exact where possible: energy sums int64, duration is integer
     division; RMS is one sqrt of one division (both correctly rounded
     IEEE, so cross-engine exact before the round)."""
     import math
 
-    def batches(it: Iterator) -> Iterator:
-        import numpy as np
-        import pandas as pd
+    import numpy as np
 
-        for pdf in it:
-            rows = []
-            for aid, data in zip(pdf["asset_id"], pdf["data"]):
-                b = bytes(data) if data is not None else b""
-                # header values are untrusted: a short payload or zero rate
-                # degrades to an invalid row, never a task failure
-                parsed = _parse_faud(b)
-                if parsed is None:
-                    rows.append((aid, None, None, None, None, None, None, False))
-                    continue
-                rate, x = parsed
-                n = x.size
-                peak = int(np.abs(x).max()) if n else 0
-                energy = int((x * x).sum())
-                # full-precision double; callers round at the query layer
-                # (Python round is banker's, SQL round is not)
-                rms = math.sqrt(energy / n) if n else 0.0
-                zc = int(((x[:-1] * x[1:]) < 0).sum())
-                rows.append((aid, int(rate), int(n), n * 1000 // rate, peak, rms, zc, True))
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "asset_id",
-                    "sample_rate",
-                    "n_samples",
-                    "duration_ms",
-                    "peak",
-                    "rms",
-                    "zero_crossings",
-                    "valid",
-                ],
-            )
+    def row(aid, b):
+        # header values are untrusted: a short payload or zero rate
+        # degrades to an invalid row, never a task failure
+        parsed = _parse_faud(b)
+        if parsed is None:
+            return [(aid, None, None, None, None, None, None, False)]
+        rate, x = parsed
+        n = x.size
+        peak = int(np.abs(x).max()) if n else 0
+        energy = int((x * x).sum())
+        # full-precision double; callers round at the query layer
+        # (Python round is banker's, SQL round is not)
+        rms = math.sqrt(energy / n) if n else 0.0
+        zc = int(((x[:-1] * x[1:]) < 0).sum())
+        return [(aid, int(rate), int(n), n * 1000 // rate, peak, rms, zc, True)]
 
-    return assets.select("asset_id", "data").mapInPandas(
-        batches, schema=AUDIO_FEATURE_SCHEMA
-    )
+    return _map_assets(assets, AUDIO_FEATURE_SCHEMA, row)
 
 
 def audio_frame_energies(assets: DataFrame, *, frame: int = 10) -> DataFrame:
@@ -339,10 +331,9 @@ def audio_frame_energies(assets: DataFrame, *, frame: int = 10) -> DataFrame:
     of voice-activity detection: (asset_id, frame_idx, energy) rows,
     energy = sum of squared i16 samples as int64.
 
-    Same codec seam as :func:`audio_features` (the ``frombuffer`` line is
-    the real-decoder drop-in point); the frame aggregation itself is
-    exact integer arithmetic, so the VAD thresholding downstream stays
-    engine-exact.
+    Same codec seam as :func:`audio_features` (the ``frombuffer`` line of
+    ``_parse_faud``); the frame aggregation itself is exact integer
+    arithmetic, so the VAD thresholding downstream stays engine-exact.
 
     Malformed/truncated payloads yield ZERO frame rows (no per-frame
     place for a valid flag) — run :func:`audio_features`, which has a
@@ -351,43 +342,26 @@ def audio_frame_energies(assets: DataFrame, *, frame: int = 10) -> DataFrame:
     if frame < 1:
         raise ValueError(f"audio_frame_energies: frame ({frame}) must be >= 1")
 
-    def batches(it: Iterator) -> Iterator:
-        import numpy as np
-        import pandas as pd
+    def row(aid, b):
+        parsed = _parse_faud(b)
+        if parsed is None:
+            return []
+        s = parsed[1]
+        nf = s.size // frame
+        energies = (s[: nf * frame] ** 2).reshape(nf, frame).sum(axis=1).tolist()
+        return [(aid, k, e) for k, e in enumerate(energies)]
 
-        for pdf in it:
-            aids, fids, energies = [], [], []
-            for aid, data in zip(pdf["asset_id"], pdf["data"]):
-                b = bytes(data) if data is not None else b""
-                parsed = _parse_faud(b)
-                if parsed is None:
-                    continue
-                _, s = parsed
-                nf = s.size // frame
-                if nf == 0:
-                    continue
-                e = (s[: nf * frame] ** 2).reshape(nf, frame).sum(axis=1)
-                aids.extend([aid] * nf)
-                fids.extend(range(nf))
-                energies.extend(e.tolist())
-            yield pd.DataFrame(
-                {"asset_id": aids, "frame_idx": fids, "energy": energies}
-            )
-
-    return assets.mapInPandas(
-        batches, "asset_id long, frame_idx long, energy long"
-    )
+    return _map_assets(assets, "asset_id long, frame_idx long, energy long", row)
 
 
 # ----------------- real stdlib codecs: BMP and WAV -----------------
 #
-# PIL/ffmpeg are absent from this container, but two production formats
-# need no external codec at all: uncompressed 24-bit BMP (fixed struct
-# layout) and PCM WAV (stdlib ``wave``). These decoders are REAL — any
-# image viewer / audio player reads the bytes the test helpers emit —
-# so the codec seam is closed for the uncompressed formats and the
-# NotImplementedError stub now covers only compressed codecs
-# (JPEG/PNG/MP3/...).
+# PIL/ffmpeg are not dependencies, but two production formats need no
+# external codec at all: uncompressed 24-bit BMP (fixed struct layout)
+# and PCM WAV (stdlib ``wave``). These decoders are REAL — any image
+# viewer / audio player reads the bytes the test helpers emit. Compressed
+# codecs (JPEG/PNG/MP3/...) would replace the ``frombuffer`` line of
+# ``_parse_fimg`` / ``_parse_fvid`` / ``_parse_faud`` above.
 
 BMP_PIXEL_SCHEMA = (
     "asset_id long, width int, height int, mean_b double, mean_g double, "
@@ -421,52 +395,36 @@ def decode_bmp_pixels(assets: DataFrame) -> DataFrame:
     bit depths surface as valid=false rows, never task failures. Channel
     means are int64 sums divided once in IEEE double, so a SQL oracle
     can reproduce them bit-for-bit."""
+    import numpy as np
 
-    def batches(it: Iterator) -> Iterator:
-        import numpy as np
-        import pandas as pd
+    def row(aid, b):
+        if len(b) >= 54 and b[:2] == b"BM":
+            offset = struct.unpack_from("<I", b, 10)[0]
+            hdr_sz, w, h = struct.unpack_from("<Iii", b, 14)
+            planes, bpp, comp = struct.unpack_from("<HHI", b, 26)
+            flip = h > 0  # positive height = bottom-up storage
+            h = abs(h)
+            stride = (w * 3 + 3) // 4 * 4
+            if (
+                hdr_sz >= 40 and planes == 1 and bpp == 24
+                and comp == 0 and w > 0 and h > 0
+                and len(b) >= offset + stride * h
+            ):
+                px = np.frombuffer(
+                    b, dtype=np.uint8, offset=offset, count=stride * h
+                ).reshape(h, stride)[:, : w * 3].reshape(h, w, 3)
+                if flip:
+                    px = px[::-1]
+                sums = px.reshape(-1, 3).sum(axis=0, dtype=np.int64)
+                n = float(w * h)
+                return [(
+                    aid, int(w), int(h),
+                    int(sums[0]) / n, int(sums[1]) / n, int(sums[2]) / n,
+                    True,
+                )]
+        return [(aid, None, None, None, None, None, False)]
 
-        for pdf in it:
-            rows = []
-            for aid, data in zip(pdf["asset_id"], pdf["data"]):
-                b = bytes(data) if data is not None else b""
-                out = (aid, None, None, None, None, None, False)
-                if len(b) >= 54 and b[:2] == b"BM":
-                    offset = struct.unpack_from("<I", b, 10)[0]
-                    hdr_sz, w, h = struct.unpack_from("<Iii", b, 14)
-                    planes, bpp, comp = struct.unpack_from("<HHI", b, 26)
-                    flip = h > 0  # positive height = bottom-up storage
-                    h = abs(h)
-                    stride = (w * 3 + 3) // 4 * 4
-                    if (
-                        hdr_sz >= 40 and planes == 1 and bpp == 24
-                        and comp == 0 and w > 0 and h > 0
-                        and len(b) >= offset + stride * h
-                    ):
-                        px = np.frombuffer(
-                            b, dtype=np.uint8, offset=offset, count=stride * h
-                        ).reshape(h, stride)[:, : w * 3].reshape(h, w, 3)
-                        if flip:
-                            px = px[::-1]
-                        sums = px.reshape(-1, 3).sum(axis=0, dtype=np.int64)
-                        n = float(w * h)
-                        out = (
-                            aid, int(w), int(h),
-                            int(sums[0]) / n, int(sums[1]) / n, int(sums[2]) / n,
-                            True,
-                        )
-                rows.append(out)
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "asset_id", "width", "height",
-                    "mean_b", "mean_g", "mean_r", "valid",
-                ],
-            )
-
-    return assets.select("asset_id", "data").mapInPandas(
-        batches, schema=BMP_PIXEL_SCHEMA
-    )
+    return _map_assets(assets, BMP_PIXEL_SCHEMA, row)
 
 
 WAV_FEATURE_SCHEMA = (
@@ -496,46 +454,31 @@ def decode_wav_audio(assets: DataFrame) -> DataFrame:
     Arrow pass — rate/channels/width/frames plus exact peak and RMS
     (int64 energy sum, one IEEE division + sqrt). Non-RIFF, truncated,
     or non-16-bit payloads surface as valid=false rows."""
+    import io
     import math
+    import wave
 
-    def batches(it: Iterator) -> Iterator:
-        import io
-        import wave
+    import numpy as np
 
-        import numpy as np
-        import pandas as pd
+    def row(aid, b):
+        try:
+            with wave.open(io.BytesIO(b)) as w:
+                rate, nch, width, nframes = (
+                    w.getframerate(), w.getnchannels(),
+                    w.getsampwidth(), w.getnframes(),
+                )
+                pcm = w.readframes(nframes)
+            if width != 2 or rate <= 0:
+                raise ValueError("unsupported wav shape")
+            x = np.frombuffer(pcm, dtype="<i2").astype(np.int64)
+            n = x.size
+            peak = int(np.abs(x).max()) if n else 0
+            rms = math.sqrt(int((x * x).sum()) / n) if n else 0.0
+            return [(
+                aid, int(rate), int(nch), int(width), int(nframes),
+                nframes * 1000 // rate, peak, rms, True,
+            )]
+        except Exception:  # noqa: BLE001 - malformed rows, not failures
+            return [(aid, None, None, None, None, None, None, None, False)]
 
-        for pdf in it:
-            rows = []
-            for aid, data in zip(pdf["asset_id"], pdf["data"]):
-                b = bytes(data) if data is not None else b""
-                try:
-                    with wave.open(io.BytesIO(b)) as w:
-                        rate, nch, width, nframes = (
-                            w.getframerate(), w.getnchannels(),
-                            w.getsampwidth(), w.getnframes(),
-                        )
-                        pcm = w.readframes(nframes)
-                    if width != 2 or rate <= 0:
-                        raise ValueError("unsupported wav shape")
-                    x = np.frombuffer(pcm, dtype="<i2").astype(np.int64)
-                    n = x.size
-                    peak = int(np.abs(x).max()) if n else 0
-                    rms = math.sqrt(int((x * x).sum()) / n) if n else 0.0
-                    rows.append((
-                        aid, int(rate), int(nch), int(width), int(nframes),
-                        nframes * 1000 // rate, peak, rms, True,
-                    ))
-                except Exception:  # noqa: BLE001 - malformed rows, not failures
-                    rows.append((aid, None, None, None, None, None, None, None, False))
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "asset_id", "sample_rate", "n_channels", "sample_width",
-                    "n_frames", "duration_ms", "peak", "rms", "valid",
-                ],
-            )
-
-    return assets.select("asset_id", "data").mapInPandas(
-        batches, schema=WAV_FEATURE_SCHEMA
-    )
+    return _map_assets(assets, WAV_FEATURE_SCHEMA, row)

@@ -18,10 +18,11 @@ shuffles (edge join + min agg) — no single-partition stage, no pairwise
 blowup beyond the edge list itself.
 
 Iterative Spark jobs MUST truncate lineage (each round's plan otherwise
-nests the previous round's): labels are localCheckpoint'ed eagerly each
-round — the convergence count materializes them anyway, so this costs
-nothing extra. Same executor-loss caveat as lsh_candidate_pairs; job
-retry is the recovery path.
+nests the previous round's): each round's labels are marked with a lazy
+``localCheckpoint(eager=False)``, and the round's convergence ``count()``
+is the one job that materializes them, so truncation costs no extra job.
+Same executor-loss caveat as lsh_candidate_pairs; job retry is the
+recovery path.
 """
 
 from __future__ import annotations

@@ -49,6 +49,13 @@ from pyspark.sql import functions as F
 from cudf_spark.catalog import load
 from cudf_spark.operators.graphs import co_occurrence_edges
 from cudf_spark.functions.hashing import hash60_sql
+from cudf_spark.multimodal import (
+    encode_assets,
+    fake_image_texture,
+    fake_video_bytes,
+    image_ahash,
+    video_signature,
+)
 from cudf_spark.queries.registry import register
 
 
@@ -163,29 +170,12 @@ def _encode_textured_images(d: DataFrame) -> DataFrame:
     the image parameters (w=did%3+8, h=did%2+8, mult=3+(did%7)*2,
     base=did*37%256) live — every image-dedup query's encode AND
     _AHASH_SQL_CTE replay these exact values, so they must never fork."""
-
-    def encode(it):
-        import pandas as pd
-
-        from cudf_spark.multimodal import fake_image_texture
-
-        for pdf in it:
-            yield pd.DataFrame(
-                {
-                    "asset_id": pdf["doc_id"],
-                    "data": [
-                        fake_image_texture(
-                            int(did) % 3 + 8,
-                            int(did) % 2 + 8,
-                            3 + (int(did) % 7) * 2,
-                            (int(did) * 37) % 256,
-                        )
-                        for did in pdf["doc_id"]
-                    ],
-                }
-            )
-
-    return d.mapInPandas(encode, schema="asset_id long, data binary")
+    return encode_assets(
+        d,
+        lambda did: fake_image_texture(
+            did % 3 + 8, did % 2 + 8, 3 + (did % 7) * 2, (did * 37) % 256
+        ),
+    )
 
 
 @register(
@@ -232,8 +222,6 @@ def _encode_textured_images(d: DataFrame) -> DataFrame:
     "plumbing, the downsample kernel, the banding AND the Hamming check.",
 )
 def mm_image_dup_ahash(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from cudf_spark.multimodal import image_ahash
-
     d = load(spark, sf_dir, "documents").select("doc_id")
     assets = _encode_textured_images(d)
     # checkpoint the hash table: it feeds BOTH band sides of the
@@ -906,53 +894,11 @@ def dedup_minhash_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def mm_video_dedup_signature(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load(spark, sf_dir, "documents").select("doc_id", "n_chars")
-
-    def encode(it):
-        import pandas as pd
-
-        from cudf_spark.multimodal import fake_video_bytes
-
-        for pdf in it:
-            yield pd.DataFrame(
-                {
-                    "asset_id": pdf["doc_id"],
-                    "data": [
-                        fake_video_bytes(
-                            int(did) % 4 + 2, int(did) % 3 + 2,
-                            int(nc) % 5 + 2, (int(did) % 8) * 16,
-                        )
-                        for did, nc in zip(pdf["doc_id"], pdf["n_chars"])
-                    ],
-                }
-            )
-
-    def signatures(it):
-        import struct as _struct
-
-        import numpy as np
-        import pandas as pd
-
-        for pdf in it:
-            rows = []
-            for aid, data in zip(pdf["asset_id"], pdf["data"]):
-                b = bytes(data) if data is not None else b""
-                if b[:4] != b"FVID" or len(b) < 16:
-                    continue
-                n, w, h = _struct.unpack(">III", b[4:16])
-                fsize = w * h
-                if fsize == 0 or len(b) < 16 + n * fsize:
-                    continue
-                sums = [
-                    str(int(np.frombuffer(
-                        b[16 + k * fsize : 16 + (k + 1) * fsize], dtype=np.uint8
-                    ).sum(dtype=np.int64)))
-                    for k in range(n)
-                ]
-                rows.append((aid, f"{w}x{h}:" + "|".join(sums)))
-            yield pd.DataFrame(rows, columns=["asset_id", "raw_sig"])
-
-    assets = d.mapInPandas(encode, schema="asset_id long, data binary")
-    sigs = assets.mapInPandas(signatures, schema="asset_id long, raw_sig string")
+    assets = encode_assets(
+        d,
+        lambda did, nc: fake_video_bytes(did % 4 + 2, did % 3 + 2, nc % 5 + 2, (did % 8) * 16),
+    )
+    sigs = video_signature(assets)
     return (
         sigs.select("asset_id", F.md5("raw_sig").alias("sig"))
         .groupBy("sig")
@@ -1334,7 +1280,6 @@ def stream_image_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFram
     import shutil
     import tempfile
 
-    from cudf_spark.multimodal import image_ahash
     from cudf_spark.streaming.ops import write_ordered_batch
 
     d = load(spark, sf_dir, "documents").select("doc_id")

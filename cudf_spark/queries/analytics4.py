@@ -26,6 +26,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from cudf_spark.catalog import load
+from cudf_spark.multimodal import audio_frame_energies, encode_fake_audio
 from cudf_spark.operators.graphs import co_occurrence_edges
 from cudf_spark.queries.registry import register
 from cudf_spark.queries.text import _lang_scores_sql
@@ -1085,27 +1086,7 @@ _VAD_THRESH = 10 * 1024 * 1024  # 10-sample frame at half amplitude
     "longest segment.",
 )
 def mm_audio_vad_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from cudf_spark.multimodal import audio_frame_energies
-
-    d = load(spark, sf_dir, "documents").select("doc_id", "n_chars")
-
-    def encode(it):
-        import pandas as pd
-
-        from cudf_spark.multimodal import fake_audio_bytes
-
-        for pdf in it:
-            yield pd.DataFrame(
-                {
-                    "asset_id": pdf["doc_id"],
-                    "data": [
-                        fake_audio_bytes(8000, int(nc) % 500 + 50, int(did) % 4096)
-                        for did, nc in zip(pdf["doc_id"], pdf["n_chars"])
-                    ],
-                }
-            )
-
-    assets = d.mapInPandas(encode, "asset_id long, data binary")
+    assets = encode_fake_audio(load(spark, sf_dir, "documents").select("doc_id", "n_chars"))
     # checkpoint the frame table: the segment branch and the per-asset
     # totals branch both consume it, and their exchanges differ enough
     # that runtime reuse doesn't collapse them — the encode+energies

@@ -15,9 +15,22 @@ from pyspark.sql import functions as F
 from cudf_spark.catalog import load
 from cudf_spark.functions.hashing import hash60, hash60_sql
 from cudf_spark.functions.textfns import normalize_text, top_token_count
+from cudf_spark.multimodal import (
+    audio_features,
+    decode_bmp_pixels,
+    decode_wav_audio,
+    encode_assets,
+    encode_fake_audio,
+    fake_image_gradient,
+    fake_video_bytes,
+    frame_sample,
+    image_features,
+    make_bmp_bytes,
+    make_wav_bytes,
+)
 from cudf_spark.operators.similarity import ann_ivf_topk
 from cudf_spark.queries.registry import register
-from cudf_spark.queries.similarity import _sql_cosine
+from cudf_spark.queries.similarity import IVF_CENTROIDS_SQL, _sql_cosine, ivf_centroids
 
 # Non-empty whitespace tokens (mirrors queries/text.py SQL_NORM/SQL_TOKS with
 # the empty-token guard applied once).
@@ -31,7 +44,7 @@ SQL_TOKS_NE = (
     "ann_ivf_topk",
     oracle=f"""
     WITH cents AS (
-        SELECT vec_id AS cid, embedding AS cvec FROM embeddings WHERE vec_id % 67 = 3
+        {IVF_CENTROIDS_SQL}
     ), q AS (
         SELECT embedding AS qv FROM embeddings WHERE vec_id = 0
     ), assign AS (
@@ -62,9 +75,7 @@ SQL_TOKS_NE = (
 )
 def ann_ivf_topk_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load(spark, sf_dir, "embeddings")
-    cents = e.filter(F.col("vec_id") % 67 == 3).select(
-        F.col("vec_id").alias("cid"), F.col("embedding").alias("cvec")
-    )
+    cents = ivf_centroids(e)
     return ann_ivf_topk(
         e.filter(F.col("vec_id") != 0),
         e.filter(F.col("vec_id") == 0),
@@ -256,27 +267,10 @@ def doc_sample_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     "binary plumbing AND the kernels, not just row counts.",
 )
 def mm_image_features(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from cudf_spark.multimodal import image_features
-
     d = load(spark, sf_dir, "documents").select("doc_id", "n_chars")
-
-    def encode(it):
-        import pandas as pd
-
-        from cudf_spark.multimodal import fake_image_gradient
-
-        for pdf in it:
-            yield pd.DataFrame(
-                {
-                    "asset_id": pdf["doc_id"],
-                    "data": [
-                        fake_image_gradient(int(nc) % 63 + 2, int(did) % 31 + 2, int(did) % 256)
-                        for did, nc in zip(pdf["doc_id"], pdf["n_chars"])
-                    ],
-                }
-            )
-
-    assets = d.mapInPandas(encode, schema="asset_id long, data binary")
+    assets = encode_assets(
+        d, lambda did, nc: fake_image_gradient(nc % 63 + 2, did % 31 + 2, did % 256)
+    )
     # checkpoint before the sort: the range-sampling pass would re-run
     # the encode+features Python chain (see mm_audio_features)
     return image_features(assets).localCheckpoint(eager=False).orderBy("asset_id")
@@ -287,27 +281,9 @@ def _encode_fake_videos(d):
     the container parameters (w=did%7+2, h=did%5+2, n=nc%13+1,
     base=did%256) live — both video queries' encodes AND their oracles
     replay these exact values, so they must never fork."""
-
-    def encode(it):
-        import pandas as pd
-
-        from cudf_spark.multimodal import fake_video_bytes
-
-        for pdf in it:
-            yield pd.DataFrame(
-                {
-                    "asset_id": pdf["doc_id"],
-                    "data": [
-                        fake_video_bytes(
-                            int(did) % 7 + 2, int(did) % 5 + 2,
-                            int(nc) % 13 + 1, int(did) % 256,
-                        )
-                        for did, nc in zip(pdf["doc_id"], pdf["n_chars"])
-                    ],
-                }
-            )
-
-    return d.mapInPandas(encode, schema="asset_id long, data binary")
+    return encode_assets(
+        d, lambda did, nc: fake_video_bytes(did % 7 + 2, did % 5 + 2, nc % 13 + 1, did % 256)
+    )
 
 
 @register(
@@ -339,8 +315,6 @@ def _encode_fake_videos(d):
     "Oracle replays the container arithmetic frame-by-frame.",
 )
 def mm_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from cudf_spark.multimodal import frame_sample
-
     d = load(spark, sf_dir, "documents").select("doc_id", "n_chars")
     assets = _encode_fake_videos(d)
     # checkpoint before the sort: the range-sampling pass would re-run
@@ -471,27 +445,7 @@ def doc_domain_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
     "waveform kernels. Completes the image/video/audio modality set.",
 )
 def mm_audio_features(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from cudf_spark.multimodal import audio_features
-
-    d = load(spark, sf_dir, "documents").select("doc_id", "n_chars")
-
-    def encode(it):
-        import pandas as pd
-
-        from cudf_spark.multimodal import fake_audio_bytes
-
-        for pdf in it:
-            yield pd.DataFrame(
-                {
-                    "asset_id": pdf["doc_id"],
-                    "data": [
-                        fake_audio_bytes(8000, int(nc) % 500 + 50, int(did) % 4096)
-                        for did, nc in zip(pdf["doc_id"], pdf["n_chars"])
-                    ],
-                }
-            )
-
-    assets = d.mapInPandas(encode, schema="asset_id long, data binary")
+    assets = encode_fake_audio(load(spark, sf_dir, "documents").select("doc_id", "n_chars"))
     feats = audio_features(assets)
     return (
         feats.select(
@@ -791,8 +745,6 @@ def sketch_bloom_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     "the mm family.",
 )
 def mm_scene_cuts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from cudf_spark.multimodal import frame_sample
-
     d = load(spark, sf_dir, "documents").select("doc_id", "n_chars")
     assets = _encode_fake_videos(d)
     means = frame_sample(assets, every_n=1)
@@ -966,25 +918,11 @@ def pipeline_length_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     "shuffle until the final presentation sort.",
 )
 def mm_wav_real_codec(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from cudf_spark.multimodal import decode_wav_audio
+    def wav(did, nc):
+        base, n = (did * 7) % 4096, nc % 200 + 20
+        return make_wav_bytes(16000, [((base + 13 * k) % 4096) - 2048 for k in range(n)])
 
-    d = load(spark, sf_dir, "documents").select("doc_id", "n_chars")
-
-    def encode(it):
-        import pandas as pd
-
-        from cudf_spark.multimodal import make_wav_bytes
-
-        for pdf in it:
-            data = []
-            for did, nc in zip(pdf["doc_id"], pdf["n_chars"]):
-                base = (int(did) * 7) % 4096
-                n = (int(nc) % 200) + 20
-                samples = [((base + 13 * k) % 4096) - 2048 for k in range(n)]
-                data.append(make_wav_bytes(16000, samples))
-            yield pd.DataFrame({"asset_id": pdf["doc_id"], "data": data})
-
-    assets = d.mapInPandas(encode, schema="asset_id long, data binary")
+    assets = encode_assets(load(spark, sf_dir, "documents").select("doc_id", "n_chars"), wav)
     return (
         decode_wav_audio(assets)
         .select(
@@ -1039,32 +977,14 @@ def mm_wav_real_codec(spark: SparkSession, sf_dir: str) -> DataFrame:
     "Map-only, no shuffle until the presentation sort.",
 )
 def mm_bmp_real_codec(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from cudf_spark.multimodal import decode_bmp_pixels
+    def bmp(did, nc):
+        w, h = nc % 13 + 3, did % 7 + 2
+        px = [
+            ((did + 3 * i) % 256, (did + 5 * i) % 256, (did + 7 * i) % 256) for i in range(w * h)
+        ]
+        return make_bmp_bytes(w, h, px)
 
-    d = load(spark, sf_dir, "documents").select("doc_id", "n_chars")
-
-    def encode(it):
-        import pandas as pd
-
-        from cudf_spark.multimodal import make_bmp_bytes
-
-        for pdf in it:
-            data = []
-            for did, nc in zip(pdf["doc_id"], pdf["n_chars"]):
-                w = (int(nc) % 13) + 3
-                h = (int(did) % 7) + 2
-                px = [
-                    (
-                        (int(did) + 3 * i) % 256,
-                        (int(did) + 5 * i) % 256,
-                        (int(did) + 7 * i) % 256,
-                    )
-                    for i in range(w * h)
-                ]
-                data.append(make_bmp_bytes(w, h, px))
-            yield pd.DataFrame({"asset_id": pdf["doc_id"], "data": data})
-
-    assets = d.mapInPandas(encode, schema="asset_id long, data binary")
+    assets = encode_assets(load(spark, sf_dir, "documents").select("doc_id", "n_chars"), bmp)
     return (
         decode_bmp_pixels(assets)
         .select(

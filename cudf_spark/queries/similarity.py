@@ -559,12 +559,29 @@ def emb_outlier_zscore(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 IVF_RECALL_K, IVF_RECALL_NPROBE = 10, 2
 
+# Seeded IVF centroids: every 67th vector stands in for an offline k-means
+# artifact. ann_ivf_topk serves this index and ann_ivf_recall measures it,
+# builders and oracles alike, so the sample is written once: a second copy
+# could make the recall envelope measure a different index than the one
+# served.
+_IVF_CENTROID_PRED = "vec_id % 67 = 3"
+IVF_CENTROIDS_SQL = (
+    f"SELECT vec_id AS cid, embedding AS cvec FROM embeddings WHERE {_IVF_CENTROID_PRED}"
+)
+
+
+def ivf_centroids(e: DataFrame) -> DataFrame:
+    """The ``IVF_CENTROIDS_SQL`` table ``(cid, cvec)`` of embeddings ``e``."""
+    return e.filter(_IVF_CENTROID_PRED).select(
+        F.col("vec_id").alias("cid"), F.col("embedding").alias("cvec")
+    )
+
 
 @register(
     "ann_ivf_recall",
     oracle=f"""
     WITH cents AS (
-        SELECT vec_id AS cid, embedding AS cvec FROM embeddings WHERE vec_id % 67 = 3
+        {IVF_CENTROIDS_SQL}
     ), qs AS (
         SELECT vec_id AS qid, embedding AS qv FROM embeddings WHERE vec_id % 101 = 7
     ), assign AS (
@@ -632,9 +649,7 @@ def ann_ivf_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     from cudf_spark.operators.similarity import ivf_assign
 
     e = load(spark, sf_dir, "embeddings")
-    cents = e.filter(F.col("vec_id") % 67 == 3).select(
-        F.col("vec_id").alias("cid"), F.col("embedding").alias("cvec")
-    )
+    cents = ivf_centroids(e)
     qs = e.filter(F.col("vec_id") % 101 == 7).select(
         F.col("vec_id").alias("qid"), F.col("embedding").alias("qv")
     )

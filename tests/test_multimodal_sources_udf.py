@@ -146,6 +146,20 @@ def test_frame_sample_indexing(spark):
         assert mean == sum(vals) / (w * h)
 
 
+def test_video_signature_frame_sums(spark):
+    """video_signature joins every frame's exact pixel sum in frame order;
+    truncated, malformed and NULL payloads yield no row."""
+    from cudf_spark.multimodal import fake_video_bytes, video_signature
+
+    w, h, n = 3, 2, 4
+    video = fake_video_bytes(w, h, n, base=250)
+    rows = [(1, video), (2, video[:-1]), (3, b"FVID"), (4, None)]
+    df = spark.createDataFrame(rows, "asset_id long, data binary")
+    got = [tuple(r) for r in video_signature(df).collect()]
+    sums = [sum((250 + 7 * k + i) % 256 for i in range(w * h)) for k in range(n)]
+    assert got == [(1, "3x2:" + "|".join(map(str, sums)))]
+
+
 def test_audio_features_byte_exact(spark):
     import math
 
@@ -178,6 +192,27 @@ def test_audio_features_byte_exact(spark):
     )
 
     assert got[3].valid is False and got[4].valid is False
+
+
+def test_audio_frame_energies_exact_and_degenerate(spark):
+    """Full frames only, exact int64 energies; short, malformed and NULL
+    payloads yield no rows; a non-positive frame is rejected up front."""
+    from cudf_spark.multimodal import audio_frame_energies, fake_audio_bytes
+
+    samples = [((13 * k) % 4096) - 2048 for k in range(25)]
+    expected = [sum(s * s for s in samples[10 * f : 10 * f + 10]) for f in range(2)]
+    assert expected == [39595045, 34591345]
+    rows = [
+        (1, fake_audio_bytes(8000, 25, 0)),  # 2 full frames + a 5-sample tail
+        (2, fake_audio_bytes(8000, 9, 0)),   # shorter than one frame
+        (3, b"FAUD" + b"\x00" * 3),          # truncated header
+        (4, None),
+    ]
+    df = spark.createDataFrame(rows, "asset_id long, data binary")
+    got = sorted(tuple(r) for r in audio_frame_energies(df, frame=10).collect())
+    assert got == [(1, 0, expected[0]), (1, 1, expected[1])]
+    with pytest.raises(ValueError):
+        audio_frame_energies(df, frame=0)
 
 
 def test_avro_roundtrip_pure_python_reader(spark, tmp_path):

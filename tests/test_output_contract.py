@@ -120,3 +120,15 @@ def test_every_public_operator_has_a_caller():
     )
     stale = sorted(set(UNCALLED_OK) - uncalled)
     assert not stale, f"UNCALLED_OK entries that now have a caller: {stale}"
+
+
+def test_queries_md_is_current():
+    """QUERIES.md is what scripts/query_index.py renders for the registry
+    as imported now: a query added, renamed, re-documented or moved to
+    another line without a regeneration fails here. Reads only."""
+    from scripts.query_index import render
+
+    committed = (Path(__file__).resolve().parent.parent / "QUERIES.md").read_text()
+    assert render() == committed, (
+        "QUERIES.md is stale; regenerate it with `python scripts/query_index.py`"
+    )

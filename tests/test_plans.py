@@ -125,16 +125,15 @@ def test_ivf_assignment_is_shuffle_free(spark):
     # query are the final top-k's and the K-row probe's.
     from cudf_spark.catalog import load
     from cudf_spark.operators.similarity import ivf_assign
-    from pyspark.sql import functions as F
+    from cudf_spark.queries.similarity import ivf_centroids
 
     e = load(spark, SF_DIR, "embeddings")
-    cents = e.filter(F.col("vec_id") % 67 == 3).select(
-        F.col("vec_id").alias("cid"), F.col("embedding").alias("cvec")
-    )
-    plan = ivf_assign(e, cents)._jdf.queryExecution().executedPlan().toString()
-    assert "Exchange hashpartitioning" not in plan
-    assert "Window" not in plan
-    assert "BroadcastNestedLoopJoin" in plan  # 1-row centroid-array broadcast
+    nodes = [(n, d) for n, d, _ in plan_nodes(ivf_assign(e, ivf_centroids(e)))]
+    names = [n for n, _ in nodes]
+    assert not [d for n, d in nodes if n == "Exchange" and "hashpartitioning" in d]
+    assert not [n for n in names if "Window" in n]
+    # 1-row centroid-array broadcast
+    assert names.count("BroadcastNestedLoopJoin") == 1
 
 
 def test_scale_confs_pinned(spark):
